@@ -6,20 +6,23 @@ The reference builds five HashMaps record-at-a-time per transaction session
 signature_tree, ec_pairing_input_size_tree, ec_recover_addresses) and then
 derives transactions/contracts at commit time (trace_tree.rs:72-245).
 
-Spark-first design — one heavy shuffle, everything else is re-aggregation
-of reduced data:
+Spark-first design — one heavy shuffle, then one small one:
 
 1. ``edge_aggregate`` groups the raw traces ONCE on
    ``(chain_id, transaction_hash, from_address, to_address)``.  call_tree
    (to→from→count) and gas_tree (from→to→gas) are the SAME pair grain, so
    a single hash aggregate computes both, plus the per-pair selector set,
-   pairing-input sizes and recovered addresses.  Spark's hash aggregate
-   gives map-side partial aggregation and whole-stage codegen fuses the
-   projections/filters in — the fusion the reference wrote by hand.
-2. All later groupBys/joins run on the edge table, already reduced by
+   pairing-input sizes, recovered addresses and the transaction's
+   keep-last eligible root.  Spark's hash aggregate gives map-side partial
+   aggregation and whole-stage codegen fuses the projections/filters in —
+   the fusion the reference wrote by hand.
+2. ``transaction_trees`` regroups the edge table, already reduced by
    orders of magnitude (one row per distinct caller/callee pair per tx),
-   and shuffle on (chain_id, transaction_hash) prefixes of the same key —
-   at 100 TB the only full-data shuffle is step 1.
+   on ``(chain_id, transaction_hash)``: one row per committing
+   transaction holding its edge list, its root and its first- and
+   second-degree callers — the reference's in-memory ``TraceTree``.  At
+   100 TB the only full-data shuffle is step 1; every output is then a
+   projection of step 2's rows.
 
 Batch semantics note (SURVEY §2.3): the reference's streaming sessionizer
 never commits the final transaction of a stream and treats a duplicate root
@@ -30,12 +33,12 @@ matching the sink dedup D1's eventual outcome.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.evm import (
-    EC_ADD_ADDRESS,
-    EC_MUL_ADDRESS,
     EC_PAIRING_ADDRESS,
     EC_RECOVER_ADDRESS,
     FIRST_DEGREE_FILTER_ADDRESSES,
@@ -46,22 +49,27 @@ from ..functions.evm import (
 
 TX_KEY = ["chain_id", "transaction_hash"]
 
-_PRECOMPILE_COUNT_COLS = {
-    "ec_recover_count": EC_RECOVER_ADDRESS,
-    "ec_add_count": EC_ADD_ADDRESS,
-    "ec_mul_count": EC_MUL_ADDRESS,
-    "ec_pairing_count": EC_PAIRING_ADDRESS,
-}
+#: root-trace fields a transaction output row is assembled from (A6)
+_ROOT_COLS = ["from_address", "to_address", "value", "input", "transaction_index",
+              "gas_used", "error", "block_number", "block_timestamp", "block_hash", "seq"]
 
 
 def _edge_prepped(traces: DataFrame) -> DataFrame:
     """Null-guarded traces with the per-row derived columns the edge
-    aggregate consumes (P10 guard + P6/P8/P7 projections)."""
+    aggregate consumes (P10 guard + P6/P8/P7 projections, and the root
+    payload of commit-eligible roots)."""
     guarded = traces.filter(
         F.col("from_address").isNotNull() & F.col("to_address").isNotNull()
     )
     is_pairing = F.col("to_address") == F.lit(EC_PAIRING_ADDRESS)
     is_recover = F.col("to_address") == F.lit(EC_RECOVER_ADDRESS)
+    # P4 + P11 (reference trace/mod.rs:68, trace_tree.rs:73-89); the
+    # guard above already requires from/to
+    is_root = (
+        (F.size("trace_address") == 0)
+        & F.col("transaction_hash").isNotNull()
+        & F.col("transaction_index").isNotNull()
+    )
     return (
         guarded.withColumn("_sel", selector_masked("input", "to_address"))
         .withColumn(
@@ -70,7 +78,14 @@ def _edge_prepped(traces: DataFrame) -> DataFrame:
         .withColumn(
             "_recovered", F.when(is_recover, ec_recover_address("output"))
         )
+        .withColumn("_root", F.when(is_root, F.struct(*_ROOT_COLS)))
     )
+
+
+def _last_root(root: str) -> Column:
+    """A6 keep-last: the root struct with the highest ``seq`` (rows whose
+    root is null have a null ordering and are skipped by ``max_by``)."""
+    return F.max_by(root, F.col(f"{root}.seq"))
 
 
 def _salted_partials(prepped: DataFrame, n_salts: int) -> DataFrame:
@@ -89,6 +104,7 @@ def _salted_partials(prepped: DataFrame, n_salts: int) -> DataFrame:
         F.collect_set("_sel").alias("_sels"),
         F.collect_list("_pair_size").alias("_psz"),
         F.collect_set("_recovered").alias("_recs"),
+        _last_root("_root").alias("_rt"),
     )
 
 
@@ -97,6 +113,8 @@ def edge_aggregate(traces: DataFrame, n_salts: int | None = None) -> DataFrame:
     (P10, reference trace_tree.rs:249) at caller/callee-pair grain.
 
     Output grain: (chain_id, transaction_hash, from_address, to_address).
+    ``root`` carries the transaction's keep-last (max ``seq``) eligible
+    root trace on the edge it lies on, null on every other edge.
 
     ``n_salts`` enables the two-stage salted variant (salt → partial →
     final) for skewed inputs: a single transaction with millions of
@@ -117,6 +135,7 @@ def edge_aggregate(traces: DataFrame, n_salts: int | None = None) -> DataFrame:
             F.collect_set("_sel").alias("selectors"),
             F.collect_list("_pair_size").alias("pairing_sizes"),
             F.collect_set("_recovered").alias("recovered"),
+            _last_root("_root").alias("root"),
         )
     partials = _salted_partials(prepped, n_salts)
     return partials.groupBy(*TX_KEY, "from_address", "to_address").agg(
@@ -129,189 +148,66 @@ def edge_aggregate(traces: DataFrame, n_salts: int | None = None) -> DataFrame:
         F.array_distinct(F.flatten(F.collect_list("_recs"))).alias(
             "recovered"
         ),
+        _last_root("_rt").alias("root"),
     )
 
 
-def transaction_rollup(edges: DataFrame) -> DataFrame:
-    """A7 + J1 + tx-level A4/A5 — per-transaction totals from the edge table.
-
-    ``has_zk`` is the commit filter J1 (reference trace_tree.rs:67-70):
-    the tree contains a call to ecRecover or ecPairing.
-    """
-    count_aggs = [
-        F.coalesce(
-            F.sum(
-                F.when(F.col("to_address") == F.lit(addr), F.col("call_count"))
-            ),
-            F.lit(0),
-        ).alias(name)
-        for name, addr in _PRECOMPILE_COUNT_COLS.items()
-    ]
-    return edges.groupBy(*TX_KEY).agg(
-        *count_aggs,
-        F.sort_array(F.flatten(F.collect_list("pairing_sizes"))).alias(
-            "ec_pairing_input_sizes"
-        ),
+def _callers(is_call: Callable[[Column], Column]) -> Column:
+    """One degree's callers: ``array<struct<address, call>>`` holding each
+    distinct caller on an ``edges`` element that passes ``is_call``, with
+    the sorted set of its callees on such edges; sorted by address."""
+    calls = F.filter("edges", is_call)
+    return F.transform(
         F.sort_array(
-            F.array_distinct(F.flatten(F.collect_list("recovered")))
-        ).alias("ec_recover_addresses"),
-        (
-            F.max(
-                F.when(
-                    F.col("to_address").isin(FIRST_DEGREE_FILTER_ADDRESSES), 1
-                ).otherwise(0)
-            )
-            == 1
-        ).alias("has_zk"),
-    )
-
-
-def root_traces(traces: DataFrame) -> DataFrame:
-    """A6 + P4 + P11 — the committing root trace per transaction.
-
-    Root = ``trace_address == []`` (P4, reference
-    src/consumer/kafka/trace/mod.rs:68); commit-eligible only with
-    transaction_hash/index/from/to all present (P11, trace_tree.rs:73-89).
-    Duplicate roots resolve keep-last by ``seq`` (batch equivalent of the
-    reference's session-restart + sink keep-last dedup).
-    """
-    w = Window.partitionBy(*TX_KEY).orderBy(F.col("seq").desc())
-    return (
-        traces.filter(F.size("trace_address") == 0)
-        .filter(
-            F.col("transaction_hash").isNotNull()
-            & F.col("transaction_index").isNotNull()
-            & F.col("from_address").isNotNull()
-            & F.col("to_address").isNotNull()
-        )
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
-def first_degree_callers(edges: DataFrame) -> DataFrame:
-    """J2 — addresses with a call edge to ecPairing/ecRecover, with the set
-    of precompiles each called (reference trace_tree.rs:93-100); degree 0.
-    """
-    return (
-        edges.filter(F.col("to_address").isin(FIRST_DEGREE_FILTER_ADDRESSES))
-        .groupBy(*TX_KEY, "from_address")
-        .agg(F.sort_array(F.collect_set("to_address")).alias("call"))
-        .withColumnRenamed("from_address", "address")
-        .withColumn("degree", F.lit(0))
-    )
-
-
-def second_degree_callers(
-    edges: DataFrame, first_degree: DataFrame, roots: DataFrame
-) -> DataFrame:
-    """J3 — addresses with a call edge to any first-degree caller, with the
-    set of first-degree callees; the transaction's EOA (root from_address)
-    is excluded (reference trace_tree.rs:103-112); degree 1.
-
-    One bounded graph hop — the reference fixes traversal depth at 2, so no
-    recursion/iteration is needed.
-    """
-    fd_addrs = first_degree.select(
-        *TX_KEY, F.col("address").alias("to_address")
-    )
-    eoa = roots.select(*TX_KEY, F.col("from_address").alias("_eoa"))
-    return (
-        edges.join(fd_addrs, on=[*TX_KEY, "to_address"])
-        .join(eoa, on=TX_KEY)
-        .filter(F.col("from_address") != F.col("_eoa"))
-        .groupBy(*TX_KEY, "from_address")
-        .agg(F.sort_array(F.collect_set("to_address")).alias("call"))
-        .withColumnRenamed("from_address", "address")
-        .withColumn("degree", F.lit(1))
-    )
-
-
-def signatures_by_callee(edges: DataFrame) -> DataFrame:
-    """A3 — per (tx, callee) the set of 4-byte selectors called on it
-    (reference signature_tree, trace_tree.rs:21,257-260), re-aggregated
-    from the per-edge partial sets (no second pass over raw traces).
-    """
-    return (
-        edges.groupBy(*TX_KEY, "to_address")
-        .agg(
+            F.array_distinct(F.transform(calls, lambda e: e.from_address))
+        ),
+        lambda a: F.struct(
+            a.alias("address"),
             F.sort_array(
-                F.array_distinct(F.flatten(F.collect_list("selectors")))
-            ).alias("function_signatures")
-        )
-        .withColumnRenamed("to_address", "address")
+                F.array_distinct(
+                    F.transform(
+                        F.filter(calls, lambda e: e.from_address == a),
+                        lambda e: e.to_address,
+                    )
+                )
+            ).alias("call"),
+        ),
     )
 
 
-def precompile_counts_by_caller(edges: DataFrame) -> DataFrame:
-    """A8 — per (tx, caller) call counts into each of the four EC
-    precompiles (reference trace_tree.rs:130-153): a slice of A1.
+def transaction_trees(edges: DataFrame) -> DataFrame:
+    """One row per committing transaction: its reduced edge list
+    (``edges``), its keep-last root (``root``) and its caller degrees.
+
+    Commits only transactions with an eligible root (P4 + P11) whose tree
+    calls ecRecover or ecPairing (J1, reference trace_tree.rs:67-70).
+
+    - ``first_degree`` (J2, trace_tree.rs:93-100): callers of
+      ecPairing/ecRecover with the precompiles each called.
+    - ``second_degree`` (J3, trace_tree.rs:103-112): callers of a
+      first-degree caller with the first-degree callees, excluding the
+      transaction's EOA (root ``from_address``).  One bounded graph hop —
+      the reference fixes traversal depth at 2.
     """
-    count_aggs = [
-        F.coalesce(
-            F.sum(
-                F.when(F.col("to_address") == F.lit(addr), F.col("call_count"))
-            ),
-            F.lit(0),
-        ).alias(name)
-        for name, addr in _PRECOMPILE_COUNT_COLS.items()
-    ]
-    return (
-        edges.filter(
-            F.col("to_address").isin(list(_PRECOMPILE_COUNT_COLS.values()))
+
+    def zk_call(e: Column) -> Column:
+        return e.to_address.isin(FIRST_DEGREE_FILTER_ADDRESSES)
+
+    edge = [c for c in edges.columns if c not in (*TX_KEY, "root")]
+    trees = (
+        edges.groupBy(*TX_KEY)
+        .agg(
+            F.collect_list(F.struct(*edge)).alias("edges"),
+            _last_root("root").alias("root"),
         )
-        .groupBy(*TX_KEY, "from_address")
-        .agg(*count_aggs)
-        .withColumnRenamed("from_address", "address")
+        .filter(F.col("root").isNotNull() & F.exists("edges", zk_call))
+        .withColumn("first_degree", _callers(zk_call))
     )
-
-
-def pairing_sizes_by_caller(edges: DataFrame) -> DataFrame:
-    """A4 — per (tx, caller) the list of input sizes sent to ecPairing
-    (reference ec_pairing_input_size_tree, trace_tree.rs:23,274-285),
-    sorted for deterministic comparison (the reference's order is HashMap
-    iteration order — deliberately not emulated).
-    """
-    return (
-        edges.filter(F.col("to_address") == F.lit(EC_PAIRING_ADDRESS))
-        .select(
-            *TX_KEY,
-            F.col("from_address").alias("address"),
-            F.sort_array(F.col("pairing_sizes")).alias(
-                "ec_pairing_input_sizes"
-            ),
-        )
-    )
-
-
-def gas_by_caller(edges: DataFrame) -> DataFrame:
-    """Total gas each address SENT (sum over its callees) per tx — the
-    per-caller slice of gas_tree used by the degree-scoped gas totals A9
-    (reference trace_tree.rs:165-175).
-    """
-    return edges.groupBy(*TX_KEY, "from_address").agg(
-        F.sum("gas_sum").alias("gas_sent")
-    )
-
-
-def degree_gas_totals(
-    gas_sent: DataFrame, degree_callers: DataFrame, out_col: str
-) -> DataFrame:
-    """A9 — per tx, total gas sent by the given degree's caller set."""
-    return (
-        degree_callers.select(
-            *TX_KEY, F.col("address").alias("from_address")
-        )
-        .join(gas_sent, on=[*TX_KEY, "from_address"])
-        .groupBy(*TX_KEY)
-        .agg(F.sum("gas_sent").alias(out_col))
-    )
-
-
-def degree_address_sets(degree_callers: DataFrame, out_col: str) -> DataFrame:
-    """Per-tx sorted set of a degree's caller addresses (feeds J4
-    closest_address selection, reference trace_tree.rs:182-187)."""
-    return degree_callers.groupBy(*TX_KEY).agg(
-        F.sort_array(F.collect_set("address")).alias(out_col)
+    first = F.transform("first_degree", lambda c: c.address)
+    return trees.withColumn(
+        "second_degree",
+        _callers(
+            lambda e: F.array_contains(first, e.to_address)
+            & (e.from_address != F.col("root.from_address"))
+        ),
     )

@@ -6,81 +6,89 @@ Each builder is ``DataFrame -> DataFrame`` and runs identically under
 see evmtrace_etl_spark.streaming).
 
 Scale shape: ONE full-data shuffle (edge_aggregate on
-chain/tx/from/to), then every downstream groupBy/join shuffles the reduced
-edge table on (chain_id, transaction_hash)-prefixed keys.  Catalyst reuses
-exchanges across the branches that share the edge table within one action.
+chain/tx/from/to), then one shuffle of the reduced edge table on
+(chain_id, transaction_hash) that builds one row per transaction
+(``transaction_trees``).  Both outputs are projections of those rows;
+the contracts' keep-first window adds the only other shuffle.
+
+Memory assumption: one transaction's reduced edge list — bounded by its
+distinct caller/callee pairs, as the reference's per-transaction
+``TraceTree`` HashMaps are — fits in one row.  Skew WITHIN a pair is
+what ``edge_aggregate(n_salts=...)`` handles.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.relational import dedup_keep_last
-from ..operators.trace_tree import (
-    TX_KEY,
-    degree_address_sets,
-    degree_gas_totals,
-    edge_aggregate,
-    first_degree_callers,
-    gas_by_caller,
-    pairing_sizes_by_caller,
-    precompile_counts_by_caller,
-    root_traces,
-    second_degree_callers,
-    signatures_by_callee,
-    transaction_rollup,
-)
+from ..functions.evm import is_precompile, selector
+from ..operators.relational import dedup_keep_first, dedup_keep_last
+from ..operators.trace_tree import edge_aggregate, transaction_trees
 
-def _empty_str_array() -> F.Column:
-    return F.array().cast("array<string>")
-
-
-def _empty_int_array() -> F.Column:
-    return F.array().cast("array<int>")
+#: the EC precompiles whose calls are counted (A8), as ``is_precompile`` names
+_COUNTED = ["ec_recover", "ec_add", "ec_mul", "ec_pairing"]
 
 
 class ZkParts:
     """The shared single-pass intermediates of the zk pipeline.
 
-    ``edges`` (the ONE full-data shuffle) and ``roots`` are persisted so
-    the transaction and contract outputs — two actions in any real run,
-    exactly like the reference emitting both from one TraceTree commit
-    (src/types/trace_tree.rs:115-245) — scan and shuffle the raw traces
-    once instead of twice (VERDICT r1 'What's wrong #4').  Within one
-    action Catalyst's ReusedExchange already dedups the shuffle; the
-    persist extends that across actions.
+    ``edges`` is the edge aggregate (the ONE full-data shuffle, one row
+    per edge); ``trees`` is one row per committing transaction built from
+    it.  ``trees`` is persisted so the transaction and contract outputs —
+    two actions in any real run, exactly like the reference emitting both
+    from one TraceTree commit (src/types/trace_tree.rs:115-245) — scan
+    the raw traces once and shuffle them once instead of twice.
 
     ``persist=True`` callers own the cache and MUST call ``unpersist()``
     when done (``process_trace_batch`` does).  Single-output standalone
     paths pass ``persist=False`` — one action evaluates one DataFrame,
-    so ReusedExchange already covers it and nothing is left cached
-    behind the caller's back.
+    so nothing is left cached behind the caller's back.
     """
 
     def __init__(self, traces: DataFrame, persist: bool = True):
         self.edges = edge_aggregate(traces)
-        self.roots = root_traces(traces)
+        self.trees = transaction_trees(self.edges)
         self._persisted = persist
         if persist:
-            self.edges = self.edges.persist()
-            self.roots = self.roots.persist()
-        self.rollup = transaction_rollup(self.edges)
-        self.fd = first_degree_callers(self.edges)
-        self.sd = second_degree_callers(self.edges, self.fd, self.roots)
+            self.trees = self.trees.persist()
 
     def unpersist(self) -> None:
         if self._persisted:
-            self.edges.unpersist()
-            self.roots.unpersist()
+            self.trees.unpersist()
 
 
 def zk_results(traces: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Single-pass dual output: (transactions, contracts_deduped) sharing
-    one edge aggregate — the Spark restatement of the reference emitting
-    Transaction + Contract rows from one commit."""
+    one persisted per-transaction table — the Spark restatement of the
+    reference emitting Transaction + Contract rows from one commit."""
     parts = ZkParts(traces)
     return zk_transactions(traces, parts), zk_contracts_deduped(traces, parts)
+
+
+def _total(edges: Column, keep: Callable[[Column], Column], field: str) -> Column:
+    """Sum of ``field`` over the edges that pass ``keep`` (0 if none)."""
+    return F.aggregate(
+        F.filter(edges, keep), F.lit(0).cast("long"), lambda acc, e: acc + e[field]
+    )
+
+
+def _call_counts(edges: Column) -> list[Column]:
+    """A8 — call counts into each EC precompile over ``edges``."""
+    return [
+        _total(edges, lambda e: is_precompile(e.to_address, p), "call_count")
+        .alias(f"{p}_count")
+        for p in _COUNTED
+    ]
+
+
+def _flat(edges: Column, field: str) -> Column:
+    """All elements of the array ``field`` over ``edges``; the per-edge
+    payloads are non-empty only on edges into their precompile (A4/A5)
+    or, for selectors, on every edge (A3)."""
+    return F.flatten(F.transform(edges, lambda e: e[field]))
 
 
 def zk_transactions(traces: DataFrame, parts: ZkParts | None = None) -> DataFrame:
@@ -90,136 +98,99 @@ def zk_transactions(traces: DataFrame, parts: ZkParts | None = None) -> DataFram
     etl_result.rs:153-159).
 
     closest_address (J4): second-degree callers if any survive the EOA
-    exclusion, else first-degree callers (trace_tree.rs:182-187).
+    exclusion, else first-degree callers (trace_tree.rs:182-187).  A
+    degree's gas total (A9, trace_tree.rs:165-175) is the gas its callers
+    sent to all their callees.
     """
     parts = parts or ZkParts(traces, persist=False)
-    edges, rollup, roots = parts.edges, parts.rollup, parts.roots
-    fd, sd = parts.fd, parts.sd
-    gas_sent = gas_by_caller(edges)
+    edges = F.col("edges")
+    first = F.transform("first_degree", lambda c: c.address)
+    second = F.transform("second_degree", lambda c: c.address)
 
-    fd_set = degree_address_sets(fd, "_fd_set")
-    sd_set = degree_address_sets(sd, "_sd_set")
-    fd_gas = degree_gas_totals(gas_sent, fd, "_fd_gas")
-    sd_gas = degree_gas_totals(gas_sent, sd, "_sd_gas")
-
-    from ..functions.evm import selector  # P5, unmasked at tx level
-
-    return (
-        roots.join(rollup.filter(F.col("has_zk")), on=TX_KEY)  # J1 gate
-        .join(fd_set, on=TX_KEY, how="left")
-        .join(sd_set, on=TX_KEY, how="left")
-        .join(fd_gas, on=TX_KEY, how="left")
-        .join(sd_gas, on=TX_KEY, how="left")
-        .select(
-            F.col("chain_id"),
-            F.col("transaction_hash"),
-            F.col("from_address"),
-            F.col("to_address"),
-            F.when(
-                F.size(F.coalesce(F.col("_sd_set"), _empty_str_array())) > 0,
-                F.col("_sd_set"),
-            )
-            .otherwise(F.coalesce(F.col("_fd_set"), _empty_str_array()))
-            .alias("closest_address"),
-            selector("input").alias("function_signature"),
-            F.col("transaction_index"),
-            F.col("block_number"),
-            F.col("block_timestamp"),
-            F.col("block_hash"),
-            F.coalesce(F.col("value"), F.lit(0).cast("decimal(38,0)")).alias(
-                "value"
-            ),
-            F.coalesce(F.col("input"), F.lit("0x")).alias("input"),
-            F.coalesce(F.col("gas_used"), F.lit(0)).alias("gas_used_total"),
-            F.coalesce(F.col("_fd_gas"), F.lit(0)).alias(
-                "gas_used_first_degree"
-            ),
-            F.coalesce(F.col("_sd_gas"), F.lit(0)).alias(
-                "gas_used_second_degree"
-            ),
-            F.col("ec_recover_count"),
-            F.col("ec_add_count"),
-            F.col("ec_mul_count"),
-            F.col("ec_pairing_count"),
-            F.col("ec_pairing_input_sizes"),
-            F.col("ec_recover_addresses"),
-            F.col("error"),
+    def gas_sent_by(callers: Column) -> Column:
+        return _total(
+            edges, lambda e: F.array_contains(callers, e.from_address), "gas_sum"
         )
-    )
 
-
-def zk_contracts(traces: DataFrame, parts: ZkParts | None = None) -> DataFrame:
-    """EP1 contract output (reference Contract assembly J5,
-    src/types/trace_tree.rs:115-163), schema per ``schemas.CONTRACT_SCHEMA``.
-
-    Union of first-degree (degree 0) and second-degree (degree 1) callers,
-    gated on committed transactions (J1 + P11), enriched with the selector
-    set called ON the address (A3), its per-precompile call counts (A8) and
-    its pairing input sizes (A4).
-    """
-    parts = parts or ZkParts(traces, persist=False)
-    edges, rollup, roots = parts.edges, parts.rollup, parts.roots
-    fd, sd = parts.fd, parts.sd
-
-    committed = roots.join(
-        rollup.filter(F.col("has_zk")).select(*TX_KEY), on=TX_KEY
-    ).select(*TX_KEY, F.col("seq").alias("_root_seq"))
-
-    callers = fd.unionByName(sd)  # U1
-    sigs = signatures_by_callee(edges)
-    counts = precompile_counts_by_caller(edges)
-    pair_sizes = pairing_sizes_by_caller(edges)
-
-    return (
-        callers.join(committed, on=TX_KEY)  # gate: only committed txs emit
-        .join(sigs, on=[*TX_KEY, "address"], how="left")
-        .join(counts, on=[*TX_KEY, "address"], how="left")
-        .join(pair_sizes, on=[*TX_KEY, "address"], how="left")
-        .select(
-            F.col("chain_id"),
-            F.col("address"),
-            F.coalesce(
-                F.col("function_signatures"), _empty_str_array()
-            ).alias("function_signatures"),
-            F.col("degree").cast("int").alias("degree"),
-            F.coalesce(F.col("ec_recover_count"), F.lit(0)).alias(
-                "ec_recover_count"
-            ),
-            F.coalesce(F.col("ec_add_count"), F.lit(0)).alias("ec_add_count"),
-            F.coalesce(F.col("ec_mul_count"), F.lit(0)).alias("ec_mul_count"),
-            F.coalesce(F.col("ec_pairing_count"), F.lit(0)).alias(
-                "ec_pairing_count"
-            ),
-            F.coalesce(
-                F.col("ec_pairing_input_sizes"), _empty_int_array()
-            ).alias("ec_pairing_input_sizes"),
-            F.col("call"),
-            F.col("_root_seq"),  # arrival order; dropped by sink dedup
-        )
+    return parts.trees.select(
+        "chain_id",
+        "transaction_hash",
+        "root.from_address",
+        "root.to_address",
+        F.when(F.size(second) > 0, second)
+        .otherwise(first)
+        .alias("closest_address"),
+        selector("root.input").alias("function_signature"),  # P5, unmasked
+        "root.transaction_index",
+        "root.block_number",
+        "root.block_timestamp",
+        "root.block_hash",
+        F.coalesce("root.value", F.lit(0).cast("decimal(38,0)")).alias("value"),
+        F.coalesce("root.input", F.lit("0x")).alias("input"),
+        F.coalesce("root.gas_used", F.lit(0)).alias("gas_used_total"),
+        gas_sent_by(first).alias("gas_used_first_degree"),
+        gas_sent_by(second).alias("gas_used_second_degree"),
+        *_call_counts(edges),
+        # sorted: the reference's HashMap iteration order is not emulated
+        F.sort_array(_flat(edges, "pairing_sizes")).alias("ec_pairing_input_sizes"),
+        F.sort_array(F.array_distinct(_flat(edges, "recovered"))).alias(
+            "ec_recover_addresses"
+        ),
+        "root.error",
     )
 
 
 def zk_contracts_deduped(
     traces: DataFrame, parts: ZkParts | None = None
 ) -> DataFrame:
-    """Contracts after the sink-level keep-first dedup D2 on
+    """EP1 contract output (reference Contract assembly J5,
+    src/types/trace_tree.rs:115-163), schema per ``schemas.CONTRACT_SCHEMA``.
+
+    One row per first-degree (degree 0) and second-degree (degree 1)
+    caller of a committed transaction (U1), with the selector set called
+    ON the address (A3), its per-precompile call counts (A8) and its
+    pairing input sizes (A4); then the sink-level keep-first dedup D2 on
     (chain_id, address, function_signatures) — reference
     etl_result.rs:246-248.  'First' = the reference's buffer arrival
     order: commits happen in stream order (root seq) and within one
     commit first-degree rows precede second-degree (trace_tree.rs:115-118)
     — so the order is (root seq, degree), not transaction-hash order.
     """
-    from pyspark.sql import Window
+    parts = parts or ZkParts(traces, persist=False)
+    edges = F.col("edges")
 
-    c = zk_contracts(traces, parts)
-    w = Window.partitionBy(
-        "chain_id", "address", "function_signatures"
-    ).orderBy(F.col("_root_seq").asc(), F.col("degree").asc())
-    return (
-        c.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_root_seq")
-    )
+    def contract(degree: int) -> Callable[[Column], Column]:
+        def row(c: Column) -> Column:
+            sent = F.filter(edges, lambda e: e.from_address == c.address)
+            received = F.filter(edges, lambda e: e.to_address == c.address)
+            return F.struct(
+                c.address.alias("address"),
+                F.sort_array(F.array_distinct(_flat(received, "selectors"))).alias(
+                    "function_signatures"
+                ),
+                F.lit(degree).alias("degree"),
+                *_call_counts(sent),
+                F.sort_array(_flat(sent, "pairing_sizes")).alias(
+                    "ec_pairing_input_sizes"
+                ),
+                c.call.alias("call"),
+            )
+
+        return row
+
+    contracts = parts.trees.select(
+        "chain_id",
+        "root.seq",
+        F.explode(
+            F.concat(
+                F.transform("first_degree", contract(0)),
+                F.transform("second_degree", contract(1)),
+            )
+        ).alias("_c"),
+    ).select("chain_id", "_c.*", F.struct("seq", "_c.degree").alias("_arrival"))
+    return dedup_keep_first(
+        contracts, ["chain_id", "address", "function_signatures"], "_arrival"
+    ).drop("_arrival")
 
 
 def blocks_passthrough(blocks: DataFrame) -> DataFrame:

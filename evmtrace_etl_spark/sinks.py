@@ -153,6 +153,8 @@ class ParquetUpsertSink:
     (NULL-filled); a type change on a shared column raises.
     """
 
+    uses_partition_hints = True
+
     def __init__(
         self,
         base_dir: str,

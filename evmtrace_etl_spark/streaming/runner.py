@@ -44,7 +44,11 @@ CONTRACT_KEYS = ["chain_id", "address", "function_signatures"]
 BLOCK_KEYS = ["chain_id", "number"]
 
 
-class UpsertSink(Protocol):  # ParquetUpsertSink / DbApiUpsertSink
+class UpsertSink(Protocol):  # the upsert sinks in evmtrace_etl_spark.sinks
+    #: whether ``upsert`` prunes by ``touched_partitions``; when False the
+    #: runner skips deriving the hint (a driver collect per micro-batch)
+    uses_partition_hints: bool
+
     def upsert(
         self,
         df: DataFrame,
@@ -70,6 +74,14 @@ def _touched_chains(batch: DataFrame) -> list[dict] | None:
     ]
 
 
+def _partition_hint(batch: DataFrame, sink: UpsertSink) -> list[dict] | None:
+    """``_touched_chains`` for sinks that prune by partition, else None —
+    skipping a driver collect and a second scan of the batch."""
+    if not getattr(sink, "uses_partition_hints", True):
+        return None
+    return _touched_chains(batch)
+
+
 def process_trace_batch(
     batch: DataFrame, sink: UpsertSink, checksum: bool = True
 ) -> None:
@@ -84,14 +96,7 @@ def process_trace_batch(
     persists would pile up in executor storage memory."""
     parts = ZkParts(batch)
     try:
-        # the probe is a driver collect per micro-batch — skip it for
-        # sinks that don't prune by partition (the DB-API writers push
-        # the conflict handling into the database instead)
-        touched = (
-            _touched_chains(batch)
-            if getattr(sink, "uses_partition_hints", True)
-            else None
-        )
+        touched = _partition_hint(batch, sink)
         tx = zk_transactions(batch, parts)
         contracts = zk_contracts_deduped(batch, parts)
         if checksum:
@@ -121,7 +126,7 @@ def process_block_batch(
         out = with_checksummed_addresses(out, *BLOCK_ADDRESS_COLS)
     sink.upsert(
         out, "blocks", BLOCK_KEYS, mode="update",
-        touched_partitions=_touched_chains(batch),
+        touched_partitions=_partition_hint(batch, sink),
     )
 
 

@@ -7,8 +7,7 @@ topic per chain), rows are processed in ``seq`` order; a root trace
 (``trace_address == []``, P4) COMMITS the open session and starts a new
 one.  Session state is the open tree's fused edge map — the same grain
 ``edge_aggregate`` produces in batch — so every closed session emits edge
-rows plus its root row, and the existing relational derivations (rollup,
-degrees, assembly) consume them unchanged.
+rows plus its root row.
 
 Semantics notes:
 - This path reproduces the reference EXACTLY where the batch groupBy
@@ -243,7 +242,8 @@ def sessionize_traces(traces: DataFrame) -> DataFrame:
 
 
 def session_edges(out: DataFrame) -> DataFrame:
-    """The committed edge rows, shaped like ``edge_aggregate`` output."""
+    """The committed edge rows: ``edge_aggregate``'s columns except
+    ``root`` (a session's root is its own row, see ``session_roots``)."""
     return out.filter(F.col("kind") == "edge").select(
         "chain_id",
         "transaction_hash",

@@ -188,6 +188,25 @@ def test_edge_aggregate_single_exchange(spark):
     assert plan.count("HashAggregate") >= 2
 
 
+def test_zk_plan_shuffles(spark):
+    """ZkParts' persisted per-transaction table costs the edge aggregate's
+    shuffle plus the per-transaction regroup, over ONE scan of the traces;
+    each zk_results output reads that table once — transactions add no
+    shuffle above it, contracts only their keep-first window's."""
+    from evmtrace_etl_spark.plans.pipeline import ZkParts, zk_results
+
+    traces = fixtures.traces_df(spark)
+    parts = ZkParts(traces)
+    table = plan_of(parts.trees, "simple")
+    parts.unpersist()
+    assert table.count("Exchange") == 2
+    assert table.count("LocalTableScan") == 1
+    for out, shuffles in zip(zk_results(traces), (0, 1)):
+        plan = plan_of(out, "simple")
+        assert plan.count("InMemoryTableScan") == 1
+        assert plan.split("InMemoryTableScan")[0].count("Exchange") == shuffles
+
+
 def test_enrichment_join_broadcasts_blocks(spark):
     """J6: the per-batch block-detail dimension is small and must
     broadcast against the head side."""

@@ -11,13 +11,17 @@ reference defines.
 from __future__ import annotations
 
 import pytest
+from hypothesis import example, given, settings
+from hypothesis import strategies as st
 
 from evmtrace_etl_spark.plans import zk_parity
 from evmtrace_etl_spark.plans.pipeline import (
     blocks_passthrough,
     zk_contracts_deduped,
+    zk_results,
     zk_transactions,
 )
+from evmtrace_etl_spark.schemas import TRACE_SCHEMA
 from evmtrace_etl_spark.sources import fixtures
 from evmtrace_etl_spark.sources.fixtures import (
     C1,
@@ -28,6 +32,9 @@ from evmtrace_etl_spark.sources.fixtures import (
     C7,
     C8,
     EOA1,
+    EOA2,
+    P_ADD,
+    P_MUL,
     P_PAIR,
     P_REC,
     TXH,
@@ -53,6 +60,68 @@ def test_contracts_match_duckdb_oracle(spark):
 def test_blocks_match_duckdb_oracle(spark):
     assert_matches_oracle(
         zk_parity.spark_blocks(spark), zk_parity.blocks_oracle_sql()
+    )
+
+
+_INPUTS = [None, "0x", "0x12345678", "0xaabbccdd" + "ab" * 4, "0x11223344" + "cd" * 64]
+_OUTPUTS = [None, "0x" + "00" * 8, "0x" + format(0x1111, "064x")]
+
+
+@st.composite
+def _zk_traces(draw):
+    """Up to 3 transaction sessions of 1-2 roots and 0-5 calls over a
+    small address pool, so hashes, roots and addresses collide: shared
+    or null transaction hashes, duplicate and ineligible roots, EOAs
+    calling first-degree callers, addresses at both degrees."""
+    pick = lambda xs: draw(st.sampled_from(xs))  # noqa: E731
+    rows = []
+    for _ in range(draw(st.integers(1, 3))):
+        chain, tx, eoa = pick([1, 10]), pick([TXH[1], TXH[2], None]), pick([EOA1, EOA2])
+        calls = [(eoa, pick([C1, C2, P_REC, P_PAIR]), [], pick([0, 1, None]))
+                 for _ in range(draw(st.integers(1, 2)))]
+        calls += [(pick([eoa, C1, C2, C3, None]),
+                   pick([C1, C2, C3, P_REC, P_ADD, P_MUL, P_PAIR, None]), [i], 0)
+                  for i in range(draw(st.integers(0, 5)))]
+        for frm, to, path, idx in calls:
+            rows.append(fixtures._t(
+                len(rows), tx, frm, to, chain=chain, idx=idx, path=path,
+                value=pick([None, 0, 5]), input=pick(_INPUTS),
+                output=pick(_OUTPUTS), gas_used=pick([None, 1, 50, 7000]),
+                error=pick([None, "Reverted"]),
+            ))
+    return rows
+
+
+# every named case at least once: duplicate roots (keep-last E1->C2),
+# C2 at both degrees, the EOA calling first-degree C1 (excluded from
+# degree 2), a null transaction_hash, and a transaction with no zk call
+_NAMED_CASES = [
+    fixtures._t(0, TXH[1], EOA1, C1, input="0xaabbccdd" + "ab" * 4, gas_used=9),
+    fixtures._t(1, TXH[1], C1, P_PAIR, input="0x" + "cd" * 192, gas_used=3, path=[0]),
+    fixtures._t(2, TXH[1], C2, C1, input="0x11223344" + "cd" * 8, gas_used=5, path=[1]),
+    fixtures._t(3, TXH[1], C2, P_REC, output=_OUTPUTS[2], gas_used=7, path=[2]),
+    fixtures._t(4, TXH[1], EOA1, C2, value=5, gas_used=11),
+    fixtures._t(5, None, EOA2, C3, gas_used=1),
+    fixtures._t(6, None, C3, P_REC, output=_OUTPUTS[1], path=[0]),
+    fixtures._t(7, TXH[2], EOA2, C3, chain=10, gas_used=2),
+    fixtures._t(8, TXH[2], C3, P_ADD, chain=10, path=[0]),
+]
+
+
+@given(rows=_zk_traces())
+@example(rows=_NAMED_CASES)
+@settings(max_examples=12, deadline=None, derandomize=True)
+def test_zk_results_match_duckdb_oracle_on_random_traces(spark, rows):
+    """zk_results against the independent DuckDB restatement on
+    generated trace sets (the fixture pins one input; this varies it)."""
+    tx, contracts = zk_results(fixtures.arrow_df(spark, rows, TRACE_SCHEMA))
+    relation = fixtures.traces_values_sql(rows)
+    assert_matches_oracle(
+        zk_parity.project_tx(tx), zk_parity.zk_transactions_oracle_sql(relation)
+    )
+    assert_matches_oracle(
+        zk_parity.project_contracts(contracts),
+        zk_parity.zk_contracts_oracle_sql(relation),
     )
 
 
@@ -169,7 +238,7 @@ def test_salted_edge_aggregate_matches_and_bounds_skew(spark):
             (
                 r.chain_id, r.transaction_hash, r.from_address, r.to_address,
                 r.call_count, r.gas_sum, sorted(r.selectors),
-                sorted(r.pairing_sizes), sorted(r.recovered),
+                sorted(r.pairing_sizes), sorted(r.recovered), r.root,
             )
             for r in df.collect()
         )
@@ -191,6 +260,13 @@ def test_salted_edge_aggregate_matches_and_bounds_skew(spark):
         "CAST(NULL AS string) AS output",
         "id AS gas_used",
         "array(CAST(id AS int)) AS trace_address",
+        # root-trace fields the aggregate carries (no row is a root)
+        "CAST(NULL AS int) AS transaction_index",
+        "CAST(NULL AS decimal(38,0)) AS value",
+        "CAST(NULL AS string) AS error",
+        "0L AS block_number",
+        "CAST(NULL AS long) AS block_timestamp",
+        "CAST(NULL AS string) AS block_hash",
     )
     n_salts = 16
     partials = _salted_partials(_edge_prepped(hot), n_salts)

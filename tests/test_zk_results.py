@@ -1,5 +1,5 @@
 """Single-pass dual-output zk plan: zk_results must equal the standalone
-builders and reuse the persisted edge aggregate instead of re-scanning."""
+builders (its plan shape is pinned in test_plan_shapes)."""
 
 from __future__ import annotations
 
@@ -20,15 +20,3 @@ def test_zk_results_matches_standalone(spark):
     tx_combined, c_combined = zk_results(traces)
     assert _rows(tx_combined) == _rows(zk_transactions(traces))
     assert _rows(c_combined) == _rows(zk_contracts_deduped(traces))
-
-
-def test_zk_results_reuses_edge_aggregate(spark):
-    traces = fixtures.traces_df(spark)
-    tx, contracts = zk_results(traces)
-    # both outputs must read the persisted edge table, not re-aggregate raw
-    # traces: the physical plans show InMemoryTableScan nodes
-    assert "InMemoryTableScan" in tx._jdf.queryExecution().executedPlan().toString()
-    assert (
-        "InMemoryTableScan"
-        in contracts._jdf.queryExecution().executedPlan().toString()
-    )
