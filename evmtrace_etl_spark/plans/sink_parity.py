@@ -2,7 +2,7 @@
 driver-checkable rows, not just local tests.
 
 Each query drives REAL side-effecting machinery (file-source structured
-stream, ``foreachBatch``, the versioned parquet upsert sink) end-to-end
+stream, ``foreachBatch``, the snapshot-log upsert sink) end-to-end
 inside the ``queries()`` callable and returns the final sink table; the
 DuckDB oracle expresses the equivalent batch semantics:
 
@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 
 from ..schemas import TRANSACTION_SCHEMA
 from ..session import materialize as _materialize
-from ..sinks import LakeUpsertSink, ParquetUpsertSink
+from ..sinks import LakeUpsertSink
 from ..sources import fixtures
 from ..streaming import runner, sources
 from . import zk_parity
@@ -146,11 +146,11 @@ def spark_stream_transactions(
     spark: SparkSession, sf_dir: str = ""
 ) -> DataFrame:
     """Fixture → JSON files → structured stream → foreachBatch zk pipeline
-    → parquet upsert sink → final transactions table."""
+    → lake upsert sink → final transactions table."""
     base = _workdir("stream_tx")
     src = os.path.join(base, "src")
     fixtures.traces_df(spark).coalesce(1).write.json(src)
-    sink = ParquetUpsertSink(os.path.join(base, "sink"))
+    sink = LakeUpsertSink(os.path.join(base, "sink"))
 
     def _process(batch: DataFrame, _batch_id: int) -> None:
         runner.process_trace_batch(batch, sink, checksum=False)
@@ -192,7 +192,7 @@ def _replay_batches(spark: SparkSession) -> list:
     keeps both sink legs fully real while the pair pays the pipeline
     cost once.
 
-    Returns ``[(tx, contracts, touched_partitions), ...]`` in batch
+    Returns ``[(tx, contracts), ...]`` in batch
     order (insert-if-absent semantics require batch 1 first).
     """
     global _replay_cache
@@ -214,8 +214,7 @@ def _replay_batches(spark: SparkSession) -> list:
                 )
             finally:
                 parts.unpersist()
-            touched = runner._touched_chains(batch)
-            out.append((tx, contracts, touched))
+            out.append((tx, contracts))
         _replay_cache = out
     return _replay_cache
 
@@ -223,17 +222,11 @@ def _replay_batches(spark: SparkSession) -> list:
 def _upsert_replay_cycles(sink, spark: SparkSession) -> None:
     """Run the two insert-if-absent cycles of the replay scenario
     against ``sink`` from the shared materialized batches — the sink
-    side of ``runner.process_trace_batch`` (checksum=False), with the
-    partition-pruning hint honored exactly as the runner does."""
-    hints = getattr(sink, "uses_partition_hints", True)
-    for tx, contracts, touched in _replay_batches(spark):
+    side of ``runner.process_trace_batch`` (checksum=False)."""
+    for tx, contracts in _replay_batches(spark):
+        sink.upsert(tx, "transactions", runner.TX_KEYS, mode="ignore")
         sink.upsert(
-            tx, "transactions", runner.TX_KEYS, mode="ignore",
-            touched_partitions=touched if hints else None,
-        )
-        sink.upsert(
-            contracts, "contracts", runner.CONTRACT_KEYS, mode="ignore",
-            touched_partitions=touched if hints else None,
+            contracts, "contracts", runner.CONTRACT_KEYS, mode="ignore"
         )
 
 
@@ -241,9 +234,6 @@ def spark_upsert_replay(spark: SparkSession, sf_dir: str = "") -> DataFrame:
     """Two foreachBatch cycles: chain-1 traces, then a full replay.  The
     insert-if-absent sink must keep the first insert of every key."""
     base = _workdir("upsert_replay")
-    # the UNIFIED storage path (r9 verdict ask #3): keyed insert-if-
-    # absent through the snapshot log (merge_into mode='ignore'), same
-    # commit protocol as streaming appends / compaction / deletes
     sink = LakeUpsertSink(os.path.join(base, "sink"))
     _upsert_replay_cycles(sink, spark)
     return zk_parity.project_tx(sink.read(spark, "transactions"))
@@ -359,7 +349,7 @@ def stream_throughput(
     and drained by an ``availableNow`` stream paced to
     ``files_per_trigger`` files per micro-batch — the file-source analog
     of Kafka ``maxOffsetsPerTrigger`` — through the full foreachBatch zk
-    pipeline into the parquet upsert sink.
+    pipeline into the lake upsert sink.
 
     Returns ``{rows, seconds, rows_per_sec, micro_batches, ...}`` for
     the bench JSON line.  Fixture-building and source-file writing are
@@ -382,8 +372,8 @@ def stream_throughput_curve(
     """The SCALING CURVE the single-point probe can't show: the same
     replicated fixture drained once per ``files_per_trigger`` pacing
     point, isolating how much of the single-point figure is fixed
-    per-trigger overhead (checkpoint commit, plan setup, sink version
-    swap) vs per-row work.  Fixture replication/writing is untimed and
+    per-trigger overhead (checkpoint commit, plan setup, sink snapshot
+    commit) vs per-row work.  Fixture replication/writing is untimed and
     paid ONCE; each point gets a fresh checkpoint + sink so the drains
     are independent.
 
@@ -434,9 +424,9 @@ def _tput_drain(
     files_per_trigger: int,
 ) -> dict:
     """One timed availableNow drain of ``src`` through the full
-    foreachBatch zk pipeline into a fresh parquet upsert sink."""
+    foreachBatch zk pipeline into a fresh lake upsert sink."""
     tag = f"fpt{files_per_trigger}"
-    sink = ParquetUpsertSink(os.path.join(base, f"sink_{tag}"))
+    sink = LakeUpsertSink(os.path.join(base, f"sink_{tag}"))
     batches = [0]
 
     def _process(batch: DataFrame, _batch_id: int) -> None:
@@ -523,14 +513,14 @@ def spark_event_windows(
             "value_sum",
         )
     )
-    sink = ParquetUpsertSink(
+    sink = LakeUpsertSink(
         os.path.join(base, "sink"), partition_cols=("event_type",)
     )
 
     def _process(batch: DataFrame, _batch_id: int) -> None:
         # availableNow runs one final empty batch to commit the advanced
-        # watermark (state eviction); skipping it saves the sink a full
-        # persist + probe + merge cycle over zero rows
+        # watermark (state eviction); skipping it saves the sink a
+        # merge commit over zero rows
         if batch.isEmpty():
             return
         sink.upsert(
@@ -601,7 +591,7 @@ def spark_stream_dedup_docs(
     _stage("b1", now - 100)
     _stage("b2_replay", now - 50)  # full replay, older-first ordering
 
-    sink = ParquetUpsertSink(os.path.join(base, "sink"), partition_cols=())
+    sink = LakeUpsertSink(os.path.join(base, "sink"), partition_cols=())
     stream = (
         spark.readStream.schema("doc_id long, text string")
         .option("maxFilesPerTrigger", "1")
@@ -839,7 +829,7 @@ def spark_stream_sessions(
             "value_sum",
         )
     )
-    sink = ParquetUpsertSink(os.path.join(base, "sink"), partition_cols=())
+    sink = LakeUpsertSink(os.path.join(base, "sink"), partition_cols=())
 
     def _process(batch: DataFrame, _batch_id: int) -> None:
         if batch.isEmpty():
@@ -956,7 +946,7 @@ def spark_stream_attribution(
         (F.unix_micros("purchase_ts") - F.unix_micros("click_ts"))
         .alias("gap_us"),
     )
-    sink = ParquetUpsertSink(os.path.join(base, "sink"), partition_cols=())
+    sink = LakeUpsertSink(os.path.join(base, "sink"), partition_cols=())
 
     def _process(batch: DataFrame, _batch_id: int) -> None:
         if batch.isEmpty():
@@ -1062,7 +1052,7 @@ def spark_stream_attribution_outer(
             .alias("gap_us"),
         )
     )
-    sink = ParquetUpsertSink(os.path.join(base, "sink"), partition_cols=())
+    sink = LakeUpsertSink(os.path.join(base, "sink"), partition_cols=())
 
     def _process(batch: DataFrame, _batch_id: int) -> None:
         if batch.isEmpty():

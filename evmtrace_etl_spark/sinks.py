@@ -4,26 +4,18 @@ src/dumper/postgres/insert_tree.rs:16-31; conflict policies from
 src/types/etl_result.rs:159, 216, 269-281 — transactions/contracts DO
 NOTHING, blocks DO UPDATE all columns).
 
-Four implementations behind one ``upsert(df, table, keys, mode)``
+Three implementations behind one ``upsert(df, table, keys, mode)``
 protocol, plus the snapshot-transactional lake tier (R19/R20 — see the
 snapshot-commit section mid-file: ``_commit_manifest`` / ``_txn_rewrite``
 / ``append_files`` / ``merge_into`` / ``read_table`` / ``table_changes``):
 
-- ``LakeUpsertSink`` — the UNIFIED path (r10): keyed upserts as
+- ``LakeUpsertSink`` — the file-table sink: keyed upserts as
   ``merge_into`` snapshot transactions through the same manifest log
   the streaming appends, compaction, deletes and updates commit
   through — one commit protocol for the whole storage tier, with
   snapshot isolation, add-only schema evolution, time travel and
   optimistic concurrency.  Per-batch cost is O(manifest-pruned
   candidate files + batch).
-- ``ParquetUpsertSink`` — versioned parquet tables with a
-  **partition-pruned merge**: tables are hive-partitioned (default
-  ``chain_id``), each micro-batch merges against ONLY the partitions it
-  touches, and untouched partitions are carried into the new version as
-  hardlinks (a metadata-only commit, the filesystem analog of a
-  Delta/Iceberg ``MERGE INTO`` transaction log entry).  Per-batch cost
-  is O(touched partitions + batch), NOT O(table) — the property that
-  makes a continuously-upserting stream viable at 100 TB.
 - ``DbApiUpsertSink`` — generates the reference's multi-row
   ``INSERT … ON CONFLICT`` against any DB-API connection, collecting the
   micro-batch to the driver like the reference's bounded dumper buffer
@@ -52,7 +44,6 @@ from __future__ import annotations
 import json
 import os
 import re
-import shutil
 import time
 from collections.abc import Callable, Iterable, Sequence
 
@@ -63,49 +54,6 @@ from pyspark.sql import types as T
 
 #: DB-API paramstyle → positional placeholder token
 _PARAM_TOKENS = {"qmark": "?", "format": "%s", "pyformat": "%s"}
-
-
-def _link_tree(src: str, dst: str) -> None:
-    """Mirror ``src`` into ``dst`` using hardlinks (copy fallback).
-
-    Hardlinking makes carrying an untouched partition into the next
-    table version a metadata-only operation — the on-disk stand-in for
-    an object-store manifest re-listing the same immutable files.
-    """
-    os.makedirs(dst, exist_ok=True)
-    for entry in os.scandir(src):
-        s, d = entry.path, os.path.join(dst, entry.name)
-        if entry.is_dir():
-            _link_tree(s, d)
-        else:
-            try:
-                os.link(s, d)
-            except OSError:
-                shutil.copy2(s, d)
-
-
-def _link_missing_partitions(old_dir: str, new_dir: str) -> list[str]:
-    """Carry forward every partition directory of ``old_dir`` that the
-    new version did not rewrite.  Returns the carried (relative) dirs.
-
-    Only DIRECTORIES absent from the new version are linked: a partition
-    dir present in both was rewritten by the merge and keeps only its
-    new files; loose root files (_SUCCESS) are never carried.
-    """
-    carried: list[str] = []
-    for entry in os.scandir(old_dir):
-        if not entry.is_dir():
-            continue
-        dst = os.path.join(new_dir, entry.name)
-        if os.path.exists(dst):
-            carried += [
-                os.path.join(entry.name, c)
-                for c in _link_missing_partitions(entry.path, dst)
-            ]
-        else:
-            _link_tree(entry.path, dst)
-            carried.append(entry.name)
-    return carried
 
 
 def _denulled(dt: T.DataType) -> T.DataType:
@@ -128,289 +76,14 @@ def _denulled(dt: T.DataType) -> T.DataType:
     return dt
 
 
-class ParquetUpsertSink:
-    """Versioned, hive-partitioned parquet tables with partition-pruned
-    upsert merge semantics.
-
-    Layout::
-
-        <base>/<table>/_VERSION          current version name
-        <base>/<table>/_SCHEMA           column order + types (JSON)
-        <base>/<table>/v3/chain_id=1/…   hive-partitioned data
-
-    ``upsert`` stages the batch once, derives its touched partition
-    values, merges against ONLY those partitions of the current version
-    (partition pruning pushes the filter into the scan), writes the
-    merged partitions into a fresh version directory, and hardlinks
-    every untouched partition across — so a batch touching 1 of N
-    partitions rewrites exactly 1 partition.  Tables without the
-    partition column fall back to a whole-table merge.
-
-    Schema evolution is ADD-ONLY (the Delta-style safe subset): batches
-    may add columns (appended to the stored schema; prior rows and
-    hardlink-carried partitions whose files lack the column read back
-    NULL through the explicit stored schema) or omit columns
-    (NULL-filled); a type change on a shared column raises.
-    """
-
-    uses_partition_hints = True
-
-    def __init__(
-        self,
-        base_dir: str,
-        partition_cols: Sequence[str] = ("chain_id",),
-    ):
-        self.base_dir = base_dir
-        self.partition_cols = tuple(partition_cols)
-
-    # -- version / schema bookkeeping ----------------------------------
-    def _current(self, table: str) -> str | None:
-        marker = os.path.join(self.base_dir, table, "_VERSION")
-        if not os.path.exists(marker):
-            return None
-        with open(marker) as fh:
-            return fh.read().strip()
-
-    def _schema(self, table: str) -> T.StructType | None:
-        path = os.path.join(self.base_dir, table, "_SCHEMA")
-        if not os.path.exists(path):
-            return None
-        with open(path) as fh:
-            return T.StructType.fromJson(json.load(fh))
-
-    def read(self, spark: SparkSession, table: str) -> DataFrame | None:
-        """Current table contents, in the original column order/types
-        (the stored schema pins partition-column types against hive
-        partition-value re-inference)."""
-        v = self._current(table)
-        if v is None:
-            return None
-        reader = spark.read
-        schema = self._schema(table)
-        if schema is not None:
-            reader = reader.schema(schema)
-        df = reader.parquet(os.path.join(self.base_dir, table, v))
-        if schema is not None:
-            df = df.select(*[f.name for f in schema.fields])
-        return df
-
-    # -- the merge ------------------------------------------------------
-    def upsert(
-        self,
-        df: DataFrame,
-        table: str,
-        keys: Sequence[str],
-        mode: str = "ignore",
-        touched_partitions: Sequence[dict] | None = None,
-    ) -> None:
-        """mode='ignore' → insert-if-absent (DO NOTHING); mode='update' →
-        replace existing rows with the batch's (DO UPDATE all columns).
-
-        ``touched_partitions`` (a list of ``{partition_col: value}``
-        dicts) is the caller's pruning hint: a stream runner can derive
-        it once per micro-batch from the RAW input (a cheap narrow
-        distinct) instead of this sink probing the fully-derived batch
-        plan — one whole plan materialization saved per upsert.  A
-        SUPERSET is safe (an over-touched partition is merged
-        unchanged); a subset is not (rows outside the hint would
-        silently merge against nothing and duplicate keys).
-        """
-        if mode not in ("ignore", "update"):  # pragma: no cover
-            raise ValueError(f"unknown upsert mode {mode!r}")
-        spark = df.sparkSession
-        tdir = os.path.join(self.base_dir, table)
-        cur = self._current(table)
-        pcols = [c for c in self.partition_cols if c in df.columns]
-
-        # ADD-ONLY schema evolution (the safe subset a Delta-style table
-        # defaults to): a batch may carry columns the table lacks (they
-        # append; prior rows — including hardlink-carried untouched
-        # partitions — read back NULL via the stored explicit schema) or
-        # omit columns the table has (NULL-filled for its rows).  A
-        # TYPE change on a shared column is rejected loudly: silently
-        # widening would leave old files unreadable under the new
-        # stored schema.
-        stored = self._schema(table) if cur is not None else None
-        if stored is not None:
-            table_types = {
-                f.name: _denulled(f.dataType) for f in stored.fields
-            }
-            clash = [
-                f"{f.name} (table {table_types[f.name].simpleString()}"
-                f" vs batch {f.dataType.simpleString()})"
-                for f in df.schema.fields
-                if f.name in table_types
-                and _denulled(f.dataType) != table_types[f.name]
-            ]
-            if clash:
-                raise ValueError(
-                    f"upsert into {table!r}: column type changed for "
-                    + ", ".join(clash)
-                    + " — schema evolution is add-only"
-                )
-            # a batch missing the table's PARTITION column is not
-            # add-only evolution: folding it in would silently rewrite
-            # the table UNPARTITIONED (NULL partition values for the
-            # batch), defeating every later pruned merge — reject loudly
-            stored_names = {f.name for f in stored.fields}
-            missing_p = [
-                c
-                for c in self.partition_cols
-                if c in stored_names and c not in df.columns
-            ]
-            if missing_p:
-                raise ValueError(
-                    f"upsert into {table!r}: batch omits partition "
-                    f"column(s) {missing_p} the table is partitioned by"
-                )
-
-        if cur is None:
-            # first write: no merge, no probe — write the batch directly
-            self._commit(df, tdir, "v0", pcols)
-            return
-
-        batch = df
-        hinted = touched_partitions is not None and bool(pcols)
-        # Without a hint the batch is materialized once into the executor
-        # cache (spilling to disk): the cached copy feeds BOTH the
-        # touched-partition probe and the merge references, so the
-        # upstream plan runs exactly once per upsert — a micro-batch is
-        # trigger-bounded, so it fits the cache tier (the reference's
-        # ≤100k-row dumper buffer plays the same role, src/main.rs:99-121).
-        # With a hint, 'ignore' references the batch once (no cache
-        # needed); 'update' references it twice (anti-join + union), so
-        # it is still cached to keep the single-evaluation guarantee.
-        if not hinted or mode == "update":
-            batch = batch.persist(StorageLevel.MEMORY_AND_DISK)
-        try:
-            existing = self.read(spark, table)
-            if pcols:
-                if hinted:
-                    touched = list(touched_partitions)
-                else:
-                    touched = batch.select(*pcols).distinct().collect()
-                if not touched:  # empty batch: nothing to merge
-                    return
-                # Partition pruning: only touched partitions are read.
-                # Single partition column (the common case) gets a flat
-                # isin — statically prunable and O(1) per analysis step
-                # where the old folded OR-chain of per-partition
-                # conjunctions was superlinear in plan-analysis cost at
-                # thousands of touched partitions.  Composite partition
-                # keys use a broadcast semi-join on the touched tuples
-                # (bounded: one row per touched partition), which AQE/
-                # dynamic partition pruning pushes into the scan.
-                if len(pcols) == 1:
-                    c = pcols[0]
-                    existing = existing.filter(
-                        F.col(c).isin([row[c] for row in touched])
-                    )
-                else:
-                    touched_df = spark.createDataFrame(
-                        [tuple(row[c] for c in pcols) for row in touched],
-                        existing.select(*pcols).schema,
-                    )
-                    existing = existing.join(
-                        F.broadcast(touched_df), on=pcols, how="leftsemi"
-                    )
-            if mode == "ignore":
-                fresh = batch.join(existing, on=list(keys), how="left_anti")
-                out = existing.unionByName(fresh, allowMissingColumns=True)
-            else:
-                kept = existing.join(batch, on=list(keys), how="left_anti")
-                out = kept.unionByName(batch, allowMissingColumns=True)
-
-            nxt = f"v{int(cur[1:]) + 1}"
-            self._commit(out, tdir, nxt, pcols, link_from=cur)
-            # hardlinked files survive in the new version
-            shutil.rmtree(os.path.join(tdir, cur), ignore_errors=True)
-        finally:
-            if not hinted or mode == "update":
-                batch.unpersist()
-
-    def compact(
-        self, spark: SparkSession, table: str, n_tasks: int = 8
-    ) -> None:
-        """Maintenance: rewrite the current version with each hive
-        partition's rows clustered into one task → one file per
-        partition directory (an unpartitioned table coalesces to
-        ``n_tasks`` files).  Micro-batch merges write one file per
-        shuffle task per touched partition, so a long-running stream
-        leaves partitions fragmented — this is the offline coalesce
-        pass a 100 TB sink schedules off the hot path (what OPTIMIZE
-        does on Delta/Iceberg; at that scale add a salt column to split
-        partitions bigger than one task should hold).  The rewrite is a
-        fresh version + marker swap, so concurrent readers of the old
-        version are unaffected (same crash contract as ``upsert``).
-        """
-        df = self.read(spark, table)
-        if df is None:
-            return
-        tdir = os.path.join(self.base_dir, table)
-        cur = self._current(table)
-        pcols = [c for c in self.partition_cols if c in df.columns]
-        if pcols:
-            out = df.repartition(n_tasks, *pcols)
-        else:
-            out = df.coalesce(n_tasks)
-        self._commit(out, tdir, f"v{int(cur[1:]) + 1}", pcols)
-        shutil.rmtree(os.path.join(tdir, cur), ignore_errors=True)
-
-    def vacuum(self, table: str) -> list[str]:
-        """Remove version directories other than the current one — the
-        crash-recovery sweep for an interrupted upsert (killed between
-        the marker swap and the old-version rmtree).  Returns removed
-        names."""
-        tdir = os.path.join(self.base_dir, table)
-        cur = self._current(table)
-        removed = []
-        if cur is None or not os.path.isdir(tdir):
-            return removed
-        for entry in os.listdir(tdir):
-            path = os.path.join(tdir, entry)
-            if (
-                os.path.isdir(path)
-                and entry.startswith("v")
-                and entry != cur
-            ):
-                shutil.rmtree(path, ignore_errors=True)
-                removed.append(entry)
-        return removed
-
-    def _commit(
-        self,
-        out: DataFrame,
-        tdir: str,
-        version: str,
-        pcols: Sequence[str],
-        link_from: str | None = None,
-    ) -> str:
-        """Write ``out`` as table version ``version``, carry untouched
-        partitions forward from ``link_from``, and swap the marker."""
-        ndir = os.path.join(tdir, version)
-        writer = out.write.mode("overwrite")
-        if pcols:
-            writer = writer.partitionBy(*pcols)
-        writer.parquet(ndir)
-        if link_from is not None and pcols:
-            _link_missing_partitions(os.path.join(tdir, link_from), ndir)
-        with open(os.path.join(tdir, "_SCHEMA"), "w") as fh:
-            json.dump(out.schema.jsonValue(), fh)
-        with open(os.path.join(tdir, "_VERSION"), "w") as fh:
-            fh.write(version)
-        return ndir
-
-
 class LakeUpsertSink:
-    """``ParquetUpsertSink``'s protocol (``upsert``/``read``/
-    ``compact``/``vacuum``) re-based on the SNAPSHOT LOG — one commit
-    protocol for the whole storage tier (r9 verdict ask #3): keyed
-    upserts land as ``merge_into`` transactions through the same
-    manifest the streaming appends (``append_files``), compaction
-    (``compact_table``), deletes and updates commit through, so a
-    table gets exactly-once ingest AND keyed merge on one log, plus
-    snapshot isolation, time travel and ``SnapshotConflict``/
-    ``retry_on_conflict`` concurrency for free.
+    """Keyed upserts (``upsert``/``read``) on the SNAPSHOT LOG — one
+    commit protocol for the whole storage tier: keyed upserts land as
+    ``merge_into`` transactions through the same manifest the streaming
+    appends (``append_files``), compaction (``compact_table``), deletes
+    and updates commit through, so a table gets exactly-once ingest AND
+    keyed merge on one log, plus snapshot isolation, time travel and
+    ``SnapshotConflict``/``retry_on_conflict`` concurrency for free.
 
     Layout: ``<base>/<table>/`` is a plain (optionally hive-
     partitioned) parquet directory with its ``_stats_manifest`` log
@@ -419,24 +92,13 @@ class LakeUpsertSink:
     / DO UPDATE sink (src/dumper/postgres.rs:41-92,
     src/types/etl_result.rs:205-281).
 
-    vs ``ParquetUpsertSink`` (kept): PUS rewrites a whole VERSION
-    DIRECTORY per upsert and hardlinks untouched partitions across —
-    O(touched partitions) data work but O(table files) link work per
-    batch, with readers pinned to version dirs.  The lake sink
-    rewrites only manifest-pruned candidate FILES and never touches
-    (or links) the rest — the shape that wins at 100 TB.  PUS remains
-    the lower-latency choice for very-high-trigger-rate micro-batches
-    where per-commit metadata jobs dominate (the same trade Delta
-    users tune with trigger intervals), and for the whole-version-swap
-    layout contract some readers pin.
-
-    Partition pruning needs no caller hint: directory-derived
-    partition stats in the manifest prune candidates to the touched
-    partitions' files (``uses_partition_hints = False`` — the runner
-    then skips deriving the hint entirely).
+    An upsert rewrites only manifest-pruned candidate FILES and never
+    touches the rest.  Partition pruning needs no caller hint:
+    directory-derived partition stats in the manifest prune candidates
+    to the touched partitions' files.  Maintenance runs on the table
+    path directly (``compact_table``, ``vacuum_table``,
+    ``maintain_table``).
     """
-
-    uses_partition_hints = False
 
     def __init__(
         self,
@@ -468,9 +130,13 @@ class LakeUpsertSink:
         )
 
     def read(self, spark: SparkSession, table: str) -> DataFrame | None:
-        if not self._exists(spark, table):
+        """Current table contents in the committed column order (a hive
+        scan alone would put the partition columns last)."""
+        path = self._path(table)
+        schema = committed_schema(spark, _manifest_dir(path, None))
+        if schema is None:
             return None
-        return read_table(spark, self._path(table))
+        return read_table(spark, path).select(*schema.fieldNames())
 
     def upsert(
         self,
@@ -478,13 +144,12 @@ class LakeUpsertSink:
         table: str,
         keys: Sequence[str],
         mode: str = "ignore",
-        touched_partitions: Sequence[dict] | None = None,
+        # ignored; accepted because perfbench's TracedSink forwards it
+        touched_partitions=None,
     ) -> None:
         """mode='ignore' → insert-if-absent (DO NOTHING, zero file
         rewrites); mode='update' → replace matched rows wholesale (DO
-        UPDATE all columns).  ``touched_partitions`` is accepted for
-        protocol compatibility and ignored — the manifest's partition
-        stats prune equivalently without a hint."""
+        UPDATE all columns)."""
         if mode not in ("ignore", "update"):  # pragma: no cover
             raise ValueError(f"unknown upsert mode {mode!r}")
         spark = df.sparkSession
@@ -513,17 +178,6 @@ class LakeUpsertSink:
             # the strategy knob only governs DO-UPDATE rewrites
             strategy=self.strategy if mode == "update" else "copy-on-write",
         )
-
-    def compact(
-        self, spark: SparkSession, table: str, n_tasks: int = 8
-    ) -> None:
-        """OPTIMIZE through the log (``compact_table``) — concurrent
-        snapshot readers are never broken."""
-        if self._exists(spark, table):
-            compact_table(spark, self._path(table))
-
-    def vacuum(self, spark: SparkSession, table: str) -> list[str]:
-        return vacuum_table(spark, self._path(table))
 
 
 def _flatten_for_sql(df: DataFrame) -> DataFrame:
@@ -580,10 +234,6 @@ class DbApiUpsertSink:
     'qmark' (sqlite3) or 'format'/'pyformat' (psycopg2, MySQLdb).
     """
 
-    #: ON CONFLICT prunes by index, not partition — the runner skips
-    #: deriving the touched-partition hint (a per-batch driver collect)
-    uses_partition_hints = False
-
     def __init__(
         self, connection_factory: Callable, paramstyle: str = "qmark"
     ):
@@ -596,10 +246,7 @@ class DbApiUpsertSink:
         table: str,
         keys: Sequence[str],
         mode: str = "ignore",
-        touched_partitions: Sequence[dict] | None = None,
     ) -> None:
-        # touched_partitions is accepted for UpsertSink interchangeability
-        # and ignored: ON CONFLICT prunes by index, not partition
         flat = _flatten_for_sql(df)
         rows = [tuple(r) for r in flat.collect()]
         if not rows:
@@ -632,9 +279,6 @@ class DbApiPartitionUpsertSink:
     respect the database's connection/ingest limits.
     """
 
-    #: see DbApiUpsertSink — conflict handling lives in the database
-    uses_partition_hints = False
-
     def __init__(
         self,
         connection_factory: Callable,
@@ -653,9 +297,7 @@ class DbApiPartitionUpsertSink:
         table: str,
         keys: Sequence[str],
         mode: str = "ignore",
-        touched_partitions: Sequence[dict] | None = None,
     ) -> None:
-        # touched_partitions ignored — see DbApiUpsertSink.upsert
         flat = _flatten_for_sql(df)
         if self.max_parallelism:
             flat = flat.coalesce(self.max_parallelism)
@@ -735,64 +377,6 @@ def write_bucketed(
         writer = writer.option("path", path)
     writer.bucketBy(n_buckets, key).sortBy(key).saveAsTable(table)
     return spark.table(table)
-
-
-def compact_parquet(
-    spark: SparkSession,
-    src: str,
-    dst: str,
-    target_bytes: int = 128 * 1024 * 1024,
-    shuffle: bool = True,
-    bloom_cols: Sequence[str] | None = None,
-    bloom_ndv: int = 1_000_000,
-) -> dict:
-    """Small-file compaction: rewrite the parquet dataset at ``src`` into
-    ``ceil(total_bytes / target_bytes)`` evenly sized files at ``dst``.
-
-    The small-files problem is the ingest tail of every 100 TB lake:
-    a streaming sink (this repo's ``foreachBatch`` writers included)
-    or an over-partitioned job leaves thousands of KB-scale files, and
-    every later scan pays one task + one open per file, swamping the
-    scheduler and the namenode long before the bytes matter.  The fix
-    is periodic compaction to files near the scan's split size
-    (``spark.sql.files.maxPartitionBytes``, 128 MB default — matching
-    it makes one compacted file ≈ one later scan task).
-
-    ``shuffle=True`` (default) round-robin-repartitions, giving evenly
-    sized output files at the cost of one full shuffle of the data —
-    the right trade for a nightly compactor since the even layout is
-    what every later scan amortizes.  ``shuffle=False`` coalesces
-    adjacent input splits instead: zero shuffle, but output sizes
-    inherit input skew — the right trade for a quick re-tile of
-    mildly fragmented data.
-
-    Sizing is measured through the Hadoop ``FileSystem`` API (works on
-    HDFS/S3A, not just ``file://``), never by collecting data.  Only
-    leaf data files count (``_SUCCESS``/checksums excluded).  Returns
-    the accounting a compaction ledger needs: files/bytes in, files
-    out, and the row count preserved (asserted equal by the tests).
-
-    ``bloom_cols`` installs parquet bloom filters on the listed columns
-    during the rewrite (see ``_with_blooms``) — compaction is the
-    natural moment to add point-lookup skipping the ingest writers
-    didn't.
-    """
-    files = _leaf_files(spark, src)
-    bytes_in = sum(ln for _rel, ln in files)
-    n_out = max(1, -(-bytes_in // int(target_bytes)))
-    df = spark.read.parquet(src)
-    out = df.repartition(n_out) if shuffle else df.coalesce(n_out)
-    writer = _with_blooms(
-        out.write.mode("overwrite"), bloom_cols, bloom_ndv
-    )
-    writer.parquet(dst)
-    return {
-        "files_in": len(files),
-        "bytes_in": int(bytes_in),
-        "files_out": len(_leaf_files(spark, dst)),
-        "n_target_files": int(n_out),
-        "target_bytes": int(target_bytes),
-    }
 
 
 def _with_blooms(writer, bloom_cols: Sequence[str] | None, ndv: int):
@@ -914,8 +498,8 @@ def compact_partitioned_parquet(
     The salt is layout-only (row placement, never values), so the
     ``rand`` is safe; ``seed`` just makes reruns reproducible.  NULL
     partition values (hive default-partition dirs) are not supported.
-    Returns the same ledger as ``compact_parquet`` plus the partition
-    count.
+    Returns the ledger ``{files_in, bytes_in, files_out,
+    n_target_files, target_bytes, n_partitions}``.
     """
     from urllib.parse import unquote
 
@@ -1168,7 +752,7 @@ def parquet_stats_index(
 
     Output: ``file`` (absolute), ``n_rows``, and ``<c>_min``/``<c>_max``
     typed as the source column for each requested col.  Persist it next
-    to the data and serve pruned reads via ``read_file_pruned``;
+    to the data and prune reads with ``prune_files``;
     maintain it incrementally with ``update_stats_index``.  ``paths``
     restricts the build to an explicit file list (the incremental
     path's delta).
@@ -1501,35 +1085,6 @@ def _prune_files_with_total(
         ).alias("_matches"),
     ).collect()[0]
     return list(agg["_matches"]), int(agg["_total"])
-
-
-def read_file_pruned(
-    spark: SparkSession,
-    path: str,
-    index: DataFrame,
-    predicates: dict[str, tuple],
-) -> DataFrame:
-    """Read ``path`` with files pruned through the stats ``index``: only
-    files whose footer spans can match the predicates enter the scan
-    plan.  The row-level filter is applied ON TOP (file granularity is
-    coarser than the predicate), so the result equals the unpruned
-    filtered read — tested file-count-down, result-identical.  Zero
-    matching files short-circuits to an empty DataFrame with the source
-    schema."""
-    schema = spark.read.parquet(path).schema
-    files = prune_files(index, predicates)
-    if not files:
-        out = spark.createDataFrame([], schema)
-    else:
-        # basePath keeps directory-encoded (hive) partition values when
-        # reading an explicit file list — without it a partitioned
-        # dataset's partition columns would silently read back NULL
-        out = (
-            spark.read.option("basePath", path)
-            .schema(schema)
-            .parquet(*files)
-        )
-    return out.filter(_pred_parts(predicates)[1])
 
 
 # ---------------------------------------------------------------------------
@@ -3162,8 +2717,8 @@ def _widens_to(a: T.DataType, b: T.DataType) -> bool:
 def _evolved_schema(
     table_schema: T.StructType, batch_schema: T.StructType, ctx: str
 ) -> T.StructType:
-    """ADD-ONLY + WIDENING schema evolution (the add/omit contract of
-    ``ParquetUpsertSink``, sinks.py:139, plus Delta's type widening):
+    """ADD-ONLY + WIDENING schema evolution (Delta's add/omit contract
+    plus its type widening):
     the batch may ADD columns (appended, nullable — old files read
     back NULL through the stored schema), OMIT columns (null-filled
     for its rows), arrive NARROWER on a shared column (cast up to the
@@ -4691,7 +4246,7 @@ def read_table(
        ``cluster_parquet``).
     3. **Bloom/dictionary skipping** — scalar predicates stay ``==`` in
        the pushed filter, so parquet bloom filters installed by
-       ``cluster_parquet``/``compact_parquet`` (``bloom_cols``) and
+       ``cluster_parquet`` (``bloom_cols``) and
        dictionary pages skip row groups on point lookups.
 
     The exact row-level condition is applied ON TOP, so the result
@@ -5120,7 +4675,7 @@ def _append_files_unlocked(
         # without the caller restating it every batch
         partition_by = list(head["partition_by"])
 
-    # ADD-ONLY schema evolution (same contract as ParquetUpsertSink):
+    # ADD-ONLY schema evolution (see _evolved_schema):
     # resolve the table schema from the committed snapshot (falling
     # back to the directory footers for pre-schema tables), reject
     # type changes, append new columns, null-fill omitted ones; the
@@ -5950,8 +5505,8 @@ def compact_table(
     maintenance op a continuously-ingesting lake runs without pausing
     readers.  ``append_files`` lands one file set per micro-batch, so a
     long-running stream fragments the table; compacting it by hand
-    (``compact_parquet`` + ``update_stats_index``) deletes files before
-    the manifest refresh and a concurrent snapshot reader breaks.  Here
+    (rewrite + ``update_stats_index``) deletes files before the
+    manifest refresh and a concurrent snapshot reader breaks.  Here
     the rewrite rides ``_txn_rewrite``: the fragments are read, rows
     repartitioned into ``ceil(bytes / target_bytes)`` files, the new
     files move in UNREFERENCED, the manifest commits atomically (old

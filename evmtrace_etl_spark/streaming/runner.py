@@ -44,42 +44,14 @@ CONTRACT_KEYS = ["chain_id", "address", "function_signatures"]
 BLOCK_KEYS = ["chain_id", "number"]
 
 
-class UpsertSink(Protocol):  # the upsert sinks in evmtrace_etl_spark.sinks
-    #: whether ``upsert`` prunes by ``touched_partitions``; when False the
-    #: runner skips deriving the hint (a driver collect per micro-batch)
-    uses_partition_hints: bool
+class UpsertSink(Protocol):
+    """A keyed upsert sink: ``sinks.LakeUpsertSink`` for file tables,
+    ``sinks.DbApiUpsertSink``/``DbApiPartitionUpsertSink`` for a SQL
+    database (mode='ignore' is DO NOTHING, 'update' DO UPDATE)."""
 
     def upsert(
-        self,
-        df: DataFrame,
-        table: str,
-        keys,
-        mode: str = "ignore",
-        touched_partitions=None,
+        self, df: DataFrame, table: str, keys, mode: str = "ignore"
     ) -> None: ...
-
-
-def _touched_chains(batch: DataFrame) -> list[dict] | None:
-    """Partition-pruning hint for the sinks: the micro-batch's distinct
-    chain_ids, derived from the RAW batch (a narrow distinct over one
-    column) so neither sink has to materialize its fully-derived output
-    plan just to learn which partitions it touches.  The raw batch can
-    only ever be a superset of any derived output's chains — the safe
-    direction (see ParquetUpsertSink.upsert)."""
-    if "chain_id" not in batch.columns:
-        return None
-    return [
-        {"chain_id": r[0]}
-        for r in batch.select("chain_id").distinct().collect()
-    ]
-
-
-def _partition_hint(batch: DataFrame, sink: UpsertSink) -> list[dict] | None:
-    """``_touched_chains`` for sinks that prune by partition, else None —
-    skipping a driver collect and a second scan of the batch."""
-    if not getattr(sink, "uses_partition_hints", True):
-        return None
-    return _touched_chains(batch)
 
 
 def process_trace_batch(
@@ -96,7 +68,6 @@ def process_trace_batch(
     persists would pile up in executor storage memory."""
     parts = ZkParts(batch)
     try:
-        touched = _partition_hint(batch, sink)
         tx = zk_transactions(batch, parts)
         contracts = zk_contracts_deduped(batch, parts)
         if checksum:
@@ -104,14 +75,8 @@ def process_trace_batch(
             contracts = with_checksummed_addresses(
                 contracts, *CONTRACT_ADDRESS_COLS
             )
-        sink.upsert(
-            tx, "transactions", TX_KEYS, mode="ignore",
-            touched_partitions=touched,
-        )
-        sink.upsert(
-            contracts, "contracts", CONTRACT_KEYS, mode="ignore",
-            touched_partitions=touched,
-        )
+        sink.upsert(tx, "transactions", TX_KEYS, mode="ignore")
+        sink.upsert(contracts, "contracts", CONTRACT_KEYS, mode="ignore")
     finally:
         parts.unpersist()
 
@@ -124,10 +89,7 @@ def process_block_batch(
     out = blocks_passthrough(batch)
     if checksum:
         out = with_checksummed_addresses(out, *BLOCK_ADDRESS_COLS)
-    sink.upsert(
-        out, "blocks", BLOCK_KEYS, mode="update",
-        touched_partitions=_partition_hint(batch, sink),
-    )
+    sink.upsert(out, "blocks", BLOCK_KEYS, mode="update")
 
 
 def start_zk_stream(

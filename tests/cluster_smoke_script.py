@@ -101,13 +101,13 @@ def main() -> None:
 
     # ---- Broadcast join + one foreachBatch sink cycle ----------------
     from evmtrace_etl_spark.plans.zk_parity import project_tx
-    from evmtrace_etl_spark.sinks import ParquetUpsertSink
+    from evmtrace_etl_spark.sinks import LakeUpsertSink
     from evmtrace_etl_spark.sources import fixtures
     from evmtrace_etl_spark.streaming import runner
 
     batch = fixtures.traces_df(spark)
     base = tempfile.mkdtemp(prefix="evmtrace_cluster_sink_")
-    sink = ParquetUpsertSink(os.path.join(base, "sink"))
+    sink = LakeUpsertSink(os.path.join(base, "sink"))
     runner.process_trace_batch(batch, sink, checksum=False)
     got_rows = sorted(
         map(tuple, project_tx(sink.read(spark, "transactions")).collect())

@@ -25,7 +25,9 @@ def pytest_collection_modifyitems(config, items):
     that still runs every driver-contract oracle row, the full
     plan-shape/sweep pins, and all operator units.  Set
     ``SPARK_GRAFT_FULL_TESTS=1`` to run everything (the round's own
-    audit trail does).
+    audit trail does).  A selection made only of ``slow`` tests (e.g.
+    ``pytest tests/test_lake_merge.py``) runs as collected rather than
+    deselecting down to zero tests.
     """
     if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
         return
@@ -34,6 +36,6 @@ def pytest_collection_modifyitems(config, items):
         (deselected if item.get_closest_marker("slow") else selected).append(
             item
         )
-    if deselected:
+    if deselected and selected:
         config.hook.pytest_deselected(items=deselected)
         items[:] = selected

@@ -1,14 +1,12 @@
-"""Small-file compaction (``sinks.compact_parquet``): the file-count
-math, exact content preservation, and both layout strategies
-(round-robin repartition vs shuffle-free coalesce)."""
+"""Small-file compaction of a hive-partitioned dataset
+(``sinks.compact_partitioned_parquet``): the per-partition file
+budgets, the preserved layout and exact content preservation."""
 
 from __future__ import annotations
 
 import os
 
 from pyspark.sql import functions as F
-
-from evmtrace_etl_spark.sinks import compact_parquet
 
 
 def _dir_bytes(path: str) -> int:
@@ -18,38 +16,6 @@ def _dir_bytes(path: str) -> int:
             if not (f.startswith("_") or f.startswith(".")):
                 total += os.path.getsize(os.path.join(root, f))
     return total
-
-
-def test_compact_repartition_even_files(spark, tmp_path):
-    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-    df = spark.range(20_000).withColumn("v", F.col("id") * 2)
-    df.repartition(64).write.parquet(src)
-
-    target = -(-_dir_bytes(src) // 4)  # aim for ~4 output files
-    stats = compact_parquet(spark, src, dst, target_bytes=target)
-
-    assert stats["files_in"] == 64
-    assert stats["n_target_files"] in (4, 5)  # ceil of measured bytes
-    # round-robin repartition writes exactly n non-empty files
-    assert stats["files_out"] == stats["n_target_files"]
-    assert stats["files_out"] < stats["files_in"]
-
-    # content preserved exactly
-    got = sorted(tuple(r) for r in spark.read.parquet(dst).collect())
-    want = sorted(tuple(r) for r in df.collect())
-    assert got == want
-
-
-def test_compact_coalesce_no_shuffle(spark, tmp_path):
-    src, dst = str(tmp_path / "src"), str(tmp_path / "dst")
-    spark.range(5_000).write.mode("overwrite").parquet(src)
-    # huge target → everything coalesces into one file, zero shuffle
-    stats = compact_parquet(
-        spark, src, dst, target_bytes=1 << 40, shuffle=False
-    )
-    assert stats["n_target_files"] == 1
-    assert stats["files_out"] == 1
-    assert spark.read.parquet(dst).count() == 5_000
 
 
 def test_compact_partitioned_preserves_layout_and_budgets(spark, tmp_path):

@@ -1,7 +1,7 @@
 """File-skipping stats index (``sinks.parquet_stats_index`` /
-``prune_files`` / ``read_file_pruned``): the manifest half of a
-lakehouse table format — footer-only per-file min/max, file-level
-pruning BEFORE the scan plan, result-identical to the unpruned read.
+``prune_files``): the manifest half of a lakehouse table format —
+footer-only per-file min/max, file-level pruning BEFORE the scan plan,
+never dropping a file that holds a matching row.
 """
 
 from __future__ import annotations
@@ -15,7 +15,6 @@ from evmtrace_etl_spark.sinks import (
     cluster_parquet,
     parquet_stats_index,
     prune_files,
-    read_file_pruned,
 )
 import pytest
 
@@ -59,7 +58,7 @@ def test_index_one_row_per_file_and_exact_counts(spark, tmp_path):
     assert dict(idx.dtypes)["v_max"] == "double"
 
 
-def test_pruned_read_skips_files_and_matches_full_scan(spark, tmp_path):
+def test_prune_files_skips_files(spark, tmp_path):
     dst = _build(spark, tmp_path)
     idx = parquet_stats_index(spark, dst, ["k"]).cache()
     total = idx.count()
@@ -67,24 +66,9 @@ def test_pruned_read_skips_files_and_matches_full_scan(spark, tmp_path):
     pred = {"k": (3_000, 4_000)}
     kept = prune_files(idx, pred)
     assert 0 < len(kept) < total, (len(kept), total)
-    got = sorted(
-        tuple(r) for r in read_file_pruned(spark, dst, idx, pred).collect()
-    )
-    want = sorted(
-        tuple(r)
-        for r in spark.read.parquet(dst)
-        .filter(F.col("k").between(3_000, 4_000))
-        .collect()
-    )
-    assert got == want and len(got) == 1_001
-
-
-def test_zero_matching_files_yields_empty_with_schema(spark, tmp_path):
-    dst = _build(spark, tmp_path)
-    idx = parquet_stats_index(spark, dst, ["k"])
-    out = read_file_pruned(spark, dst, idx, {"k": (10**9, 10**9 + 5)})
-    assert out.count() == 0
-    assert out.columns == ["k", "grp", "v"]
+    # the kept files hold every matching row
+    hits = spark.read.parquet(*kept).filter(F.col("k").between(3_000, 4_000))
+    assert hits.count() == 1_001
 
 
 def test_multi_column_predicates_intersect(spark, tmp_path):
@@ -92,9 +76,12 @@ def test_multi_column_predicates_intersect(spark, tmp_path):
     idx = parquet_stats_index(spark, dst, ["k", "v"]).cache()
     # v = 2k, so k in [3000, 4000] & v in [0, 6500] -> k in [3000, 3250]
     pred = {"k": (3_000, 4_000), "v": (0.0, 6_500.0)}
-    got = read_file_pruned(spark, dst, idx, pred)
-    assert got.count() == 251
-    assert len(prune_files(idx, pred)) <= len(
+    kept = prune_files(idx, pred)
+    hits = spark.read.parquet(*kept).filter(
+        F.col("k").between(3_000, 4_000) & F.col("v").between(0.0, 6_500.0)
+    )
+    assert hits.count() == 251
+    assert len(kept) <= len(
         prune_files(idx, {"k": (3_000, 4_000)})
     )
 
@@ -367,23 +354,6 @@ def test_flat_manifest_migrates_to_versioned(spark, tmp_path):
     assert got == flat
     # the legacy flat part files are gone (migrated, not duplicated)
     assert not glob.glob(manifest + "/part-*.parquet")
-
-
-def test_read_file_pruned_keeps_partition_values(spark, tmp_path):
-    """Pruned reads of a hive-partitioned dataset keep the
-    directory-encoded partition column (basePath) — without it the
-    values silently read back NULL."""
-    from evmtrace_etl_spark.sinks import parquet_stats_index
-
-    part = str(tmp_path / "part")
-    spark.range(1000).selectExpr("id % 4 as p", "id as k").write.partitionBy(
-        "p"
-    ).parquet(part)
-    idx = parquet_stats_index(spark, part, ["k"])
-    got = read_file_pruned(spark, part, idx, {"k": (100, 200)})
-    rows = got.collect()
-    assert len(rows) == 101
-    assert all(r["p"] is not None and r["p"] == r["k"] % 4 for r in rows)
 
 
 def test_update_where_rewrites_matching_rows_in_place(spark, tmp_path):

@@ -365,59 +365,6 @@ def test_lake_schema_evolution_add_only(spark, tmp_path):
     assert row["v"] == 999 and row["lang"] is None
 
 
-def test_lake_upsert_sink_protocol(spark, tmp_path):
-    """LakeUpsertSink speaks ParquetUpsertSink's protocol on the
-    snapshot log: first-write seeds a hive-partitioned manifest-
-    tracked table, insert-if-absent keeps first writes on replay,
-    DO-UPDATE keeps the later batch, the partition-omitting batch
-    raises, and the merge prunes candidates to the touched
-    partition's files (directory-derived stats, no caller hint)."""
-    from evmtrace_etl_spark.sinks import LakeUpsertSink, read_table
-
-    sink = LakeUpsertSink(str(tmp_path / "lake"), partition_cols=("chain",))
-    b1 = spark.createDataFrame(
-        [(1, "a", 10), (1, "b", 11), (2, "c", 20)],
-        "chain int, h string, v long",
-    )
-    sink.upsert(b1, "tx", ["chain", "h"], mode="ignore")
-    assert sink.read(spark, "tx").count() == 3
-    # replay + one new row: first insert of every key wins
-    b2 = spark.createDataFrame(
-        [(1, "a", 99), (1, "d", 12)], "chain int, h string, v long"
-    )
-    led_files = sorted(
-        glob.glob(str(tmp_path / "lake" / "tx" / "chain=2" / "*.parquet"))
-    )
-    sink.upsert(b2, "tx", ["chain", "h"], mode="ignore")
-    t = sink.read(spark, "tx")
-    assert t.count() == 4
-    assert t.filter("h = 'a'").select("v").collect()[0][0] == 10
-    # untouched partition chain=2 kept its files (no rewrite, no link)
-    assert sorted(
-        glob.glob(str(tmp_path / "lake" / "tx" / "chain=2" / "*.parquet"))
-    ) == led_files
-    # DO UPDATE: later batch wins
-    sink.upsert(
-        spark.createDataFrame([(1, "a", -7)], "chain int, h string, v long"),
-        "tx",
-        ["chain", "h"],
-        mode="update",
-    )
-    assert sink.read(spark, "tx").filter("h = 'a'").select("v").collect()[
-        0
-    ][0] == -7
-    # partition-omitting batch rejected (same contract as PUS)
-    with pytest.raises(ValueError, match="partition"):
-        sink.upsert(
-            spark.createDataFrame([("z", 1)], "h string, v long"),
-            "tx",
-            ["h"],
-            mode="ignore",
-        )
-    # and the whole table still reads through the snapshot
-    assert read_table(spark, str(tmp_path / "lake" / "tx")).count() == 4
-
-
 def test_table_changes_incremental_read(spark, tmp_path):
     """Append-span CDC: rows committed after a retained snapshot are
     served from the DELTA FILES only; a rewrite inside the span raises

@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from evmtrace_etl_spark.operators import similarity, text_analysis, trace_tree
 from evmtrace_etl_spark.operators.enrichment import enrich_blocks
-from evmtrace_etl_spark.sinks import ParquetUpsertSink
+from evmtrace_etl_spark.sinks import LakeUpsertSink
 from evmtrace_etl_spark.sources import fixtures
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR_SMALL", "/root/testdata/sf0.001")
@@ -225,7 +225,7 @@ def test_sink_read_prunes_partitions(spark, tmp_path):
     """The hive-partitioned sink layout actually yields partition
     pruning: a chain_id predicate lands in PartitionFilters, so a merge
     over 1 of N chains scans 1 of N directories."""
-    sink = ParquetUpsertSink(str(tmp_path / "sink"))
+    sink = LakeUpsertSink(str(tmp_path / "sink"))
     df = spark.range(8).select(
         (F.col("id") % 4).alias("chain_id"), F.col("id").alias("number")
     )

@@ -16,7 +16,7 @@ from evmtrace_etl_spark.plans.pipeline import zk_results
 from evmtrace_etl_spark.sinks import (
     DbApiPartitionUpsertSink,
     DbApiUpsertSink,
-    ParquetUpsertSink,
+    LakeUpsertSink,
 )
 from evmtrace_etl_spark.sources import fixtures
 from evmtrace_etl_spark.streaming import monitor, runner, sources
@@ -37,7 +37,7 @@ def traces_json_dir(spark, tmp_path):
 
 
 def test_stream_matches_batch(spark, traces_json_dir, tmp_path):
-    sink = ParquetUpsertSink(str(tmp_path / "sink"))
+    sink = LakeUpsertSink(str(tmp_path / "sink"))
     q = runner.start_zk_stream(
         sources.file_trace_stream(spark, traces_json_dir),
         sink,
@@ -59,7 +59,7 @@ def test_stream_matches_batch(spark, traces_json_dir, tmp_path):
 
 
 def test_stream_idempotent_replay(spark, traces_json_dir, tmp_path):
-    sink = ParquetUpsertSink(str(tmp_path / "sink"))
+    sink = LakeUpsertSink(str(tmp_path / "sink"))
     for i in range(2):  # same data replayed with a fresh checkpoint
         q = runner.start_zk_stream(
             sources.file_trace_stream(spark, traces_json_dir),
@@ -74,7 +74,7 @@ def test_stream_idempotent_replay(spark, traces_json_dir, tmp_path):
 def test_block_stream_upsert(spark, tmp_path):
     d = tmp_path / "blocks_json"
     fixtures.blocks_df(spark).coalesce(1).write.json(str(d))
-    sink = ParquetUpsertSink(str(tmp_path / "sink"))
+    sink = LakeUpsertSink(str(tmp_path / "sink"))
     q = runner.start_block_stream(
         sources.file_block_stream(spark, str(d)),
         sink,
@@ -226,38 +226,40 @@ class _NoCloseConn:
         pass
 
 
-def _inodes(vdir):
-    """(relative path, inode) for every parquet data file under vdir."""
+def _inodes(tdir):
+    """(relative path, inode) for every parquet data file of the table
+    at tdir — its hidden ``_``/``.`` dirs (the manifest log) excluded."""
     out = {}
-    for root, _dirs, files in os.walk(str(vdir)):
+    for root, dirs, files in os.walk(str(tdir)):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
         for f in files:
             if f.endswith(".parquet"):
                 p = os.path.join(root, f)
-                out[os.path.relpath(p, str(vdir))] = os.stat(p).st_ino
+                out[os.path.relpath(p, str(tdir))] = os.stat(p).st_ino
     return out
 
 
-def test_parquet_upsert_rewrites_only_touched_partitions(spark, tmp_path):
+def test_lake_upsert_rewrites_only_touched_partitions(spark, tmp_path):
     """A batch touching 1 of 3 chain partitions must rewrite only that
-    partition: untouched partitions are carried as hardlinks (same
-    inode, same file name), the touched one gets fresh files."""
-    sink = ParquetUpsertSink(str(tmp_path / "sink"))
+    partition: untouched partitions' files are unchanged (same inode,
+    same file name), the touched one gets fresh files."""
+    sink = LakeUpsertSink(str(tmp_path / "sink"))
     schema = "chain_id long, number long, gas_used long"
     b1 = spark.createDataFrame(
         [(c, i, c * 100 + i) for c in (1, 2, 3) for i in range(5)], schema
     )
     sink.upsert(b1, "blocks", ["chain_id", "number"], mode="update")
     tdir = tmp_path / "sink" / "blocks"
-    before = _inodes(tdir / "v0")
+    before = _inodes(tdir)
     assert any("chain_id=2" in p for p in before)  # partitioned layout
 
     b2 = spark.createDataFrame([(2, 1, 999), (2, 9, 209)], schema)
     sink.upsert(b2, "blocks", ["chain_id", "number"], mode="update")
-    after = _inodes(tdir / "v1")
+    after = _inodes(tdir)
 
     untouched_before = {p: i for p, i in before.items() if "chain_id=2" not in p}
     untouched_after = {p: i for p, i in after.items() if "chain_id=2" not in p}
-    assert untouched_before == untouched_after  # hardlink carry-forward
+    assert untouched_before == untouched_after  # files left in place
     touched_after = {i for p, i in after.items() if "chain_id=2" in p}
     touched_before = {i for p, i in before.items() if "chain_id=2" in p}
     assert touched_after and not (touched_after & touched_before)
@@ -275,10 +277,10 @@ def test_parquet_upsert_rewrites_only_touched_partitions(spark, tmp_path):
     ]
 
 
-def test_parquet_upsert_ignore_mode_partitioned(spark, tmp_path):
+def test_lake_upsert_ignore_mode_partitioned(spark, tmp_path):
     """insert-if-absent across partitions: replayed keys are skipped,
     new keys land in their partition."""
-    sink = ParquetUpsertSink(str(tmp_path / "sink"))
+    sink = LakeUpsertSink(str(tmp_path / "sink"))
     schema = "chain_id long, transaction_hash string, v long"
     keys = ["chain_id", "transaction_hash"]
     sink.upsert(
@@ -296,16 +298,16 @@ def test_parquet_upsert_ignore_mode_partitioned(spark, tmp_path):
     assert got == {(1, "a"): 1, (2, "b"): 2, (1, "c"): 3}
 
 
-def test_parquet_upsert_schema_evolution_add_only(spark, tmp_path):
+def test_lake_upsert_schema_evolution_add_only(spark, tmp_path):
     """ADD-ONLY schema evolution: a batch carrying a NEW column evolves
-    the table (old rows — including hardlink-carried untouched
-    partitions whose parquet files never contain the column — read back
-    NULL through the stored explicit schema); a batch OMITTING a column
+    the table (old rows — including untouched partitions whose parquet
+    files never contain the column — read back NULL through the
+    committed schema); a batch OMITTING a column
     null-fills its rows; a TYPE change on a shared column is rejected
     loudly."""
     import pytest as _pytest
 
-    sink = ParquetUpsertSink(str(tmp_path / "sink"))
+    sink = LakeUpsertSink(str(tmp_path / "sink"))
     keys = ["chain_id", "number"]
     sink.upsert(
         spark.createDataFrame(
@@ -315,7 +317,7 @@ def test_parquet_upsert_schema_evolution_add_only(spark, tmp_path):
         "blocks", keys, mode="update",
     )
     # batch with an added column, touching ONLY chain 1 (chain 2 is
-    # hardlink-carried: its files lack the column on disk)
+    # not rewritten: its files lack the column on disk)
     sink.upsert(
         spark.createDataFrame(
             [(1, 0, 111, "0xaa"), (1, 9, 119, "0xbb")],
@@ -327,7 +329,7 @@ def test_parquet_upsert_schema_evolution_add_only(spark, tmp_path):
     assert df.columns == ["chain_id", "number", "gas_used", "miner"]
     got = {(r.chain_id, r.number): (r.gas_used, r.miner) for r in df.collect()}
     assert got[(1, 0)] == (111, "0xaa") and got[(1, 9)] == (119, "0xbb")
-    assert got[(2, 1)] == (201, None)  # carried partition null-fills
+    assert got[(2, 1)] == (201, None)  # untouched partition null-fills
     assert got[(1, 1)] == (101, None)  # merged-partition old row too
     # batch omitting the evolved column still lands (null-filled)
     sink.upsert(
@@ -388,32 +390,6 @@ def test_parquet_upsert_schema_evolution_add_only(spark, tmp_path):
     assert sink.read(spark, "blocks").count() == 10
 
 
-def test_parquet_upsert_hinted_matches_probed(spark, tmp_path):
-    """A caller-supplied touched-partitions hint (even a superset) must
-    produce the identical table to the sink's own probe, in both modes —
-    and an over-touched partition must still carry its data forward."""
-    schema = "chain_id long, number long, v long"
-    keys = ["chain_id", "number"]
-    b1 = spark.createDataFrame(
-        [(c, i, c * 10 + i) for c in (1, 2, 3) for i in range(3)], schema
-    )
-    b2 = spark.createDataFrame([(2, 1, 999), (2, 5, 25)], schema)
-    for mode in ("ignore", "update"):
-        probed = ParquetUpsertSink(str(tmp_path / f"p_{mode}"))
-        hinted = ParquetUpsertSink(str(tmp_path / f"h_{mode}"))
-        probed.upsert(b1, "t", keys, mode=mode)
-        hinted.upsert(b1, "t", keys, mode=mode)
-        probed.upsert(b2, "t", keys, mode=mode)
-        hinted.upsert(
-            b2, "t", keys, mode=mode,
-            # superset hint: chain 3 is not in b2
-            touched_partitions=[{"chain_id": 2}, {"chain_id": 3}],
-        )
-        got_p = sorted(map(tuple, probed.read(spark, "t").collect()))
-        got_h = sorted(map(tuple, hinted.read(spark, "t").collect()))
-        assert got_p == got_h, mode
-
-
 def test_dbapi_partition_sink_matches_collect(spark, tmp_path):
     """The foreachPartition writer must produce the same table as the
     driver-collect writer, and stay idempotent under replay."""
@@ -463,7 +439,7 @@ def test_kafka_stream_smoke(spark, tmp_path):
             "no Kafka broker/connector in this environment; "
             "file_trace_stream is the documented permanent CI stand-in"
         )
-    sink = ParquetUpsertSink(str(tmp_path / "sink"))
+    sink = LakeUpsertSink(str(tmp_path / "sink"))
     q = runner.start_zk_stream(
         sources.kafka_trace_stream(spark, bootstrap, "traces-1", chain_id=1),
         sink,
@@ -495,50 +471,6 @@ def test_monitoring_and_health(spark):
         assert health["stats"]["latest_trace_block_1"] >= 100
     finally:
         server.shutdown()
-
-
-def test_sink_compact_and_vacuum(spark, tmp_path):
-    """compact: same rows, one data file per hive partition; vacuum:
-    removes a stale version dir left by a crash before cleanup."""
-    import os
-
-    sink = ParquetUpsertSink(str(tmp_path / "sink"))
-    schema = "chain_id long, number long, gas_used long"
-    b1 = spark.createDataFrame(
-        [(c, i, c * 100 + i) for c in (1, 2) for i in range(20)], schema
-    )
-    sink.upsert(b1.repartition(8), "blocks", ["chain_id", "number"],
-                mode="update")
-    before = {
-        (r.chain_id, r.number): r.gas_used
-        for r in sink.read(spark, "blocks").collect()
-    }
-    tdir = tmp_path / "sink" / "blocks"
-
-    def files_in(part):
-        cur = (tdir / "_VERSION").read_text()
-        d = tdir / cur / part
-        return [f for f in os.listdir(d) if f.endswith(".parquet")]
-
-    assert len(files_in("chain_id=1")) > 1  # fragmented before compact
-    sink.compact(spark, "blocks")
-    assert len(files_in("chain_id=1")) == 1
-    assert len(files_in("chain_id=2")) == 1
-    after = {
-        (r.chain_id, r.number): r.gas_used
-        for r in sink.read(spark, "blocks").collect()
-    }
-    assert after == before
-
-    # simulate a crash that left an old version behind
-    stale = tdir / "v999"
-    stale.mkdir()
-    (stale / "junk").write_text("x")
-    removed = sink.vacuum("blocks")
-    assert "v999" in removed
-    assert not stale.exists()
-    cur = (tdir / "_VERSION").read_text()
-    assert (tdir / cur).exists()
 
 
 def test_decode_payloads_split_quarantines_bad_json(spark):
@@ -618,9 +550,7 @@ def test_watermark_drops_closed_windows_keeps_open_ones(spark, tmp_path):
     # late-events watermark 10.5h) — dropped before aggregation
     write_file("b3", [("a", ts(t0 + int(9.25 * h)), 1.0)], _time.time() - 25)
 
-    from evmtrace_etl_spark.sinks import ParquetUpsertSink
-
-    sink = ParquetUpsertSink(str(tmp_path / "sink"), partition_cols=())
+    sink = LakeUpsertSink(str(tmp_path / "sink"), partition_cols=())
     stream = (
         spark.readStream.schema("event_type string, ts timestamp, value double")
         .option("maxFilesPerTrigger", "1")
@@ -862,7 +792,7 @@ def test_stream_resumes_from_checkpoint_without_reprocessing(spark, tmp_path):
     b = full.filter("chain_id != 1")
     (d / "a.json").write_text("\n".join(a.toJSON().collect()) + "\n")
 
-    sink = ParquetUpsertSink(str(tmp_path / "sink"))
+    sink = LakeUpsertSink(str(tmp_path / "sink"))
     ckpt = str(tmp_path / "ckpt")
 
     def drained_batches():
