@@ -311,9 +311,10 @@ def ivf_assignments(
 ) -> DataFrame:
     """Nearest-centroid cell per vector — a single narrow projection.
 
-    The codebook is inlined as plan literals (the Spark analog of
-    broadcasting an IVF index's dictionary), so assignment is a per-row
-    array-of-struct max: NO Exchange, no 16×-row window shuffle.
+    The codebook arrives as a one-row broadcast table
+    (``_ivf_codebook_df`` — an IVF index's dictionary shipped once per
+    executor), so assignment is a per-row array-of-struct max: NO
+    shuffle Exchange, no 16×-row window shuffle.
     ``tests/test_plan_shapes.py`` pins that property.
     """
     with_cells = _ivf_with_cells(emb, cents, vec_col)
@@ -961,10 +962,10 @@ def ivf_trained_topk(
 
     The only driver round-trip between the stages is the trained
     codebook itself (≤ k × dim scalars — the same collect ``ivf_train``
-    already ends on), re-inlined as plan literals for the shuffle-free
-    assignment; everything else stays distributed.  Rounded 6-dp
-    centroid means are what both engines serve from, so the oracle
-    reproduces the scores bit-for-bit.
+    already ends on), broadcast back as a one-row table for the
+    shuffle-free assignment; everything else stays distributed.
+    Rounded 6-dp centroid means are what both engines serve from, so
+    the oracle reproduces the scores bit-for-bit.
     """
     trained = ivf_train(emb, n_centroids, n_iters, vec_col, dim, seed=seed)
     cents = sorted(
@@ -1247,9 +1248,10 @@ def pq_trained_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Train → serve in one query: fitted sub-codebooks from
-    ``pq_train`` re-inlined as plan literals feeding the same ADC serve
-    plan as ``pq_topk`` — the production PQ path (fit offline,
-    broadcast the codebook, encode + search shuffle-free)."""
+    ``pq_train`` attached as the same one-row broadcast table
+    (``_pq_codebook_df``) feeding the same ADC serve plan as
+    ``pq_topk`` — the production PQ path (fit offline, broadcast the
+    codebook, encode + search shuffle-free)."""
     trained = pq_train(emb, n_subspaces, n_codes, vec_col)
     d = len(trained[0][0])  # sub-vector length, no second seed collect
     based = _pq_dists_df(emb, trained, d, vec_col)
@@ -1352,8 +1354,9 @@ def ivfpq_topk(
     within-cell offsets, which is exactly the fine structure the coarse
     quantizer cannot see.
 
-    Scale shape: assignment and residuals are narrow projections
-    (inlined centroid CASE — no join); sub-distances fold ONCE per row
+    Scale shape: assignment and residuals are narrow projections over
+    the broadcast one-row codebook (centroid lookup in the broadcast
+    struct array — no shuffle); sub-distances fold ONCE per row
     behind the ``_pq_dists_df`` Generate barrier; candidate generation
     is a cell equi-join against the broadcast probe LUTs (each corpus
     vector lives in exactly one cell, so no post-join dedup); the final

@@ -130,13 +130,10 @@ class LakeUpsertSink:
         )
 
     def read(self, spark: SparkSession, table: str) -> DataFrame | None:
-        """Current table contents in the committed column order (a hive
-        scan alone would put the partition columns last)."""
-        path = self._path(table)
-        schema = committed_schema(spark, _manifest_dir(path, None))
-        if schema is None:
+        """Current table contents in the committed column order."""
+        if not self._exists(spark, table):
             return None
-        return read_table(spark, path).select(*schema.fieldNames())
+        return read_table(spark, self._path(table))
 
     def upsert(
         self,
@@ -985,11 +982,14 @@ def _write_parquet_local(
     dirpath: str,
 ) -> None:
     """Write ``rows`` as ONE parquet file under ``dirpath`` with pyarrow
-    on the driver — the O(batch) manifest delta is a few rows, and a
-    distributed write would pay a full Spark job's scheduling floor to
-    emit them.  Types follow the Spark schema exactly (arrow-converted),
-    so Spark reads the file back under the same types the distributed
-    writer would have produced."""
+    on the driver — stats rows held on the driver are written on the
+    driver, a new table's first (checkpoint) commit included: the
+    O(batch) manifest version is a few rows, and a distributed write
+    would pay a full Spark job's scheduling floor (plus a Python worker
+    pool for the list-backed DataFrame) to emit them.  Types follow the
+    Spark schema exactly (arrow-converted), so Spark reads the file
+    back under the same types the distributed writer would have
+    produced."""
     import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -1469,10 +1469,9 @@ def _reconstruct_manifest(
     else:
         out = spark.read.option("mergeSchema", "true").parquet(*dirs)
     if removed:
-        rdf = spark.createDataFrame(
-            [(f,) for f in sorted(removed)], "file string"
-        )
-        out = out.join(F.broadcast(rdf), on="file", how="left_anti")
+        # the removed lists are already on the driver: an IN-set filter
+        # keeps the plan JVM-only (no Python-backed relation to join)
+        out = out.filter(~F.col("file").isin(sorted(removed)))
     return out
 
 
@@ -1976,7 +1975,12 @@ def _commit_manifest_unleased(
     ``_CHECKPOINT_EVERY`` commits (or on ``force_checkpoint`` — the
     maintenance rebuild path) the FULL reconstructed manifest is
     materialized instead, bounding the chain a snapshot read replays.
-    Either way the version parquet is written to a hidden temp dir and
+    Stats rows held on the driver (``added_rows``) are written on the
+    driver (``_write_parquet_local``, zero Spark jobs) whenever they
+    are the whole version: every delta, and a new table's first
+    commit, whose checkpoint is exactly those rows.  Only a fold over
+    a prior manifest (or a RESTORE) runs a distributed write.  Either
+    way the version parquet is written to a hidden temp dir and
     atomically RENAMED into ``v<N>`` — rename-to-existing fails, so a
     stale cross-driver writer that slipped past the version check can
     never overwrite a committed winner's version dir in place.
@@ -2161,6 +2165,14 @@ def _commit_manifest_unleased(
         else [e["file"] for e in pending_struct]
     )
 
+    # stats rows held on the driver ARE the manifest version when there
+    # is nothing to fold them into: every delta, and a new table's
+    # first checkpoint (no prior version, no flat layout, no RESTORE)
+    local_write = (
+        added_rows is not None
+        and restore_manifest is None
+        and not (checkpoint and (committed or flat))
+    )
     # stamp the delta rows with the version that adds them — deletion
     # vectors compare tombstone versions against this to decide which
     # files a suppression still applies to
@@ -2173,9 +2185,9 @@ def _commit_manifest_unleased(
                 list(stats_schema.fields)
                 + [T.StructField("added_version", T.LongType(), True)]
             )
-        if checkpoint:
-            # the checkpoint path needs a DataFrame to union; the rows
-            # are batch-sized, so the conversion is driver-trivial
+        if checkpoint and not local_write:
+            # a fold needs a DataFrame to union with the prior manifest;
+            # the rows are batch-sized, so the conversion is driver-trivial
             added_stats = spark.createDataFrame(
                 [
                     tuple(r.get(f.name) for f in stats_schema.fields)
@@ -2188,12 +2200,11 @@ def _commit_manifest_unleased(
             "added_version", F.lit(nxt).cast("long")
         )
 
-    local_delta = not checkpoint and added_rows is not None
     if restore_manifest is not None:
         # RESTORE: the checkpoint IS the target snapshot's manifest
-        checkpoint, local_delta = True, False
+        checkpoint = True
         out_df = restore_manifest
-    elif checkpoint:
+    elif checkpoint and not local_write:
         parts: list[DataFrame] = []
         prev_df: DataFrame | None = None
         if committed:
@@ -2202,12 +2213,7 @@ def _commit_manifest_unleased(
             prev_df = spark.read.parquet(*flat)
         if prev_df is not None:
             if removed_now:
-                rdf = spark.createDataFrame(
-                    [(f,) for f in removed_now], "file string"
-                )
-                prev_df = prev_df.join(
-                    F.broadcast(rdf), on="file", how="left_anti"
-                )
+                prev_df = prev_df.filter(~F.col("file").isin(removed_now))
             parts.append(prev_df)
         if added_stats is not None:
             parts.append(added_stats)
@@ -2219,7 +2225,7 @@ def _commit_manifest_unleased(
             out_df = spark.createDataFrame(
                 [], "file string, n_rows long, added_version long"
             )
-    elif not local_delta:
+    elif not local_write:
         out_df = (
             added_stats
             if added_stats is not None
@@ -2235,8 +2241,8 @@ def _commit_manifest_unleased(
     # any input (old versions / flat files) is touched and before the
     # log is — committed versions are never inputs to their own
     # destruction, and a stale writer never writes INTO a live vdir
-    if local_delta:
-        # a batch-sized delta: ONE driver-side pyarrow write, zero
+    if local_write:
+        # batch-sized stats rows: ONE driver-side pyarrow write, zero
         # Spark jobs — the commit's metadata cost is O(batch) in time,
         # not just bytes
         _write_parquet_local(spark, added_rows, stats_schema, tmpdir)
@@ -3447,11 +3453,8 @@ def _txn_rewrite_unlocked(
             # the manifest already tracks per-file counts — exact for the
             # candidate set (per-suppression on DV tables: a re-layout
             # also materializes tombstones, and the delta shows here)
-            cand_df2 = spark.createDataFrame(
-                [(f,) for f in cand], "file string"
-            )
             rows_before = int(
-                manifest.join(F.broadcast(cand_df2), on="file", how="leftsemi")
+                manifest.filter(F.col("file").isin(cand))
                 .agg(F.sum("n_rows"))
                 .collect()[0][0]
                 or 0
@@ -4322,13 +4325,12 @@ def read_table(
     out = _read_files(spark, files, schema, base_path=path)
     dvs = _active_dvs(spark, mdir, version=version)
     if dvs:
-        # the suppression joins move the merge keys to the front —
-        # restore the committed column order (a serve-path surface
-        # must not reorder columns based on join mechanics)
-        out = _dv_suppress(spark, out, manifest, dvs).select(
-            *[f.name for f in schema.fields]
-        )
-    return out.filter(cond)
+        out = _dv_suppress(spark, out, manifest, dvs)
+    # serve the committed column order on every path: a hive scan puts
+    # partition columns last and the suppression joins move the merge
+    # keys to the front — a serve-path surface must not reorder columns
+    # based on layout or join mechanics
+    return out.select(*schema.fieldNames()).filter(cond)
 
 
 def last_committed_txn(

@@ -13,6 +13,7 @@ from __future__ import annotations
 import contextlib
 import io
 import os
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -77,9 +78,15 @@ def test_pq_codebooks_arrive_broadcast(emb):
     assert "BroadcastExchange" in plan
     # the seed codebook's doubles must not be plan literals: the first
     # corpus vector (vec_id 0) IS seed centroid 0, so any inlined
-    # sub-codebook would print its components in the plan text
+    # sub-codebook would print its components in the plan text.  Only
+    # reprs of 12+ characters are searched (a short one such as 0.5
+    # could collide with an unrelated literal like 0.5D), and each must
+    # stand as a whole number, not inside a longer one.
     row0 = emb.filter(F.col("vec_id") == 0).select("embedding").first()
-    assert f"{float(row0[0][0])!r}" not in plan
+    sigs = [r for r in (repr(float(v)) for v in row0[0]) if len(r) >= 12]
+    assert len(sigs) >= len(row0[0]) // 2, sigs
+    for sig in sigs:
+        assert not re.search(rf"(?<![\d.]){re.escape(sig)}(?!\d)", plan), sig
 
 
 def test_lsh_topk_broadcasts_queries(emb):
